@@ -261,21 +261,11 @@ object Cli {
         // `-update-info` (cmd_query.go:48): recompute the sidecar first
         if (f.contains("update-info")) table.rebuild()
         val q = buildQuery(f)
-        // integer-weight check: THE shared gate (QueryCache
-        // .integerWeightType) — a fractional weight column must fall
-        // back to the uncached run, not abort the CLI with the cache's
-        // IllegalArgumentException
-        def intWeight: Boolean = q.weightCol.forall { wc =>
-          QueryCache.integerWeightType(
-            table.read().schema.fields.find(_.name == wc).map(_.dataType))
-        }
-        // -tdigest IS cacheable (deterministic QuantileBins partials) but
-        // only unweighted — weight+tdigest throws identically on both
-        // paths, so no fall-back is needed for it
-        val cacheable = f.contains("cache-queries") && !q.samples &&
-          q.timeBucket.isEmpty && q.distinctLimit.isEmpty &&
-          (q.op == AggOp.CountOp || q.op == AggOp.AvgOp || q.op == AggOp.SumOp ||
-            q.op == AggOp.HistOp) && intWeight
+        // THE cache gate (QueryCache.refusal, read from the sidecar): a
+        // shape the cache refuses falls back to the uncached run instead
+        // of aborting the CLI with the cache's IllegalArgumentException
+        val cacheable = f.contains("cache-queries") &&
+          QueryCache.refusal(q, table.info().columns).isEmpty
         // retry on a stale plan-time listing when a concurrent digest
         // consumed segments mid-query — the reference CLI's "BLOCK SIZE
         // CHANGED" re-run (table_query.go); each attempt re-plans on a

@@ -257,7 +257,8 @@ class GraftTable(spark: SparkSession, root: String) {
           // does not widen the table extents. Leave-one-out, so a corrupt
           // segment cannot inflate sigma enough to admit itself. When the
           // counter-evidence is too thin for a sigma test (rest <= 100
-          // rows or sigma = 0), admission depends on where the extreme
+          // rows, fewer rows than the segment itself, or sigma = 0),
+          // admission depends on where the extreme
           // came from: a "log" segment is FRESH evidence and admits
           // freely (the reference also skips the cutoff at small counts),
           // but a "block" segment is digest-RECYCLED rows the table has
@@ -273,7 +274,11 @@ class GraftTable(spark: SparkSession, root: String) {
             def thinVerdict: Boolean =
               kind != "block" ||
                 (if (isMin) c.min.forall(v >= _) else c.max.forall(v <= _))
-            if (cnt <= 100) return thinVerdict
+            // a rest smaller than the segment is no yardstick for it: a
+            // minutes-wide newest block would reject a weeks-wide
+            // history's extremes as "1000 sigma" out, and its sumsq
+            // cancels to a sigma that flips the verdict digest to digest
+            if (cnt <= 100 || cnt < s.cnt) return thinVerdict
             val mean = (totSum - s.sum) / cnt
             val variance = math.max(0.0, (totSq - s.sumsq) / cnt - mean * mean)
             val sigma = math.sqrt(variance)
@@ -463,7 +468,7 @@ class GraftTable(spark: SparkSession, root: String) {
     * live digest holds the lock); compute stats for dirs the sidecar has
     * never seen (only happens after a crash between a write and its
     * sidecar update). */
-  private def reconciled(): TableInfo = {
+  private[sources] def reconciled(): TableInfo = {
     if (Files.exists(journalP) && !Files.exists(rootP.resolve("digest.lock")))
       finishOrphanJournal()
     // if a digest is live (lock held), don't touch dirs — but still exclude
@@ -501,6 +506,15 @@ class GraftTable(spark: SparkSession, root: String) {
     * query cache / trim for zero-job zone-map classification. */
   def blockSegments: Seq[SegmentInfo] =
     reconciled().segments.filter(_.kind == "block").sortBy(_.id)
+
+  /** The block the next compacting digest refolds (FillPartialBlock,
+    * table_block_io.go:48-107): the newest block under [[ChunkSize]] rows.
+    * "Newest" is sidecar segment order, in which every write appends its
+    * segment; block ids are random UUIDs and say nothing about age. The
+    * query cache computes this block fresh instead of caching a partial
+    * the next digest would delete. */
+  def topUpBlock(i: TableInfo): Option[SegmentInfo] =
+    i.segments.filter(s => s.kind == "block" && s.rows < ChunkSize).lastOption
 
   /** Recompute the whole sidecar by scanning current data (the reference's
     * `rebuild` command — table_recover_info.go). ONE job: per-segment
@@ -549,7 +563,11 @@ class GraftTable(spark: SparkSession, root: String) {
         }
         val registry = schema.fields.toSeq.map(f =>
           ColumnInfo(f.name, typeName(f.dataType), None, None))
-        derive(registry, segs)
+        // keep the old sidecar's segment order (the age order
+        // [[topUpBlock]] reads); segments it never listed go last
+        val order = Try(info().segments.map(_.id)).getOrElse(Nil)
+          .zipWithIndex.toMap
+        derive(registry, segs.sortBy(s => order.getOrElse(s.id, Int.MaxValue)))
       }
     writeInfo(i)
     i
@@ -774,10 +792,7 @@ class GraftTable(spark: SparkSession, root: String) {
     if (logs.isEmpty) return
     // newest partial block gets folded into this digest (bounded block
     // count); compact=false keeps prior blocks untouched (pure append)
-    val partialBlock =
-      if (!compact) None
-      else i.segments.filter(s => s.kind == "block" && s.rows < ChunkSize)
-        .sortBy(_.id).lastOption
+    val partialBlock = if (compact) topUpBlock(i) else None
     val consumedBlocks = partialBlock.map(s => blocksP.resolve(s.id)).toSeq
     val consumedIds = partialBlock.map(_.id).toSet
 
@@ -960,12 +975,19 @@ class GraftTable(spark: SparkSession, root: String) {
     * already in the merged block, so reading both would double-count (the
     * window between a digest's rename and its cleanup, or after a crash
     * inside it). */
-  def read(readLog: Boolean = false): DataFrame = {
+  def read(readLog: Boolean = false): DataFrame = readListed(readLog)._2
+
+  private def snapshotDirs(readLog: Boolean): Seq[Path] = {
     val (supBlocks, supLogs) = journalSuperseded()
-    val dirs = listDirs(blocksP).filterNot(d => supBlocks(d.getFileName.toString)) ++
+    listDirs(blocksP).filterNot(d => supBlocks(d.getFileName.toString)) ++
       (if (readLog) listDirs(ingestP).filterNot(d => supLogs(d.getFileName.toString)) else Nil)
+  }
+
+  /** [[read]], with the segment dirs it listed. */
+  private def readListed(readLog: Boolean): (Seq[Path], DataFrame) = {
+    val dirs = snapshotDirs(readLog)
     require(dirs.nonEmpty, s"table $root is empty")
-    readDirs(dirs)
+    (dirs, readDirs(dirs))
   }
 
   /** Run `f` against a fresh snapshot relation, retrying with a re-listed
@@ -983,7 +1005,16 @@ class GraftTable(spark: SparkSession, root: String) {
     * not a stale-listing failure rethrows immediately. */
   def withSnapshot[A](readLog: Boolean = false, maxRetries: Int = 5)(
       f: DataFrame => A): A =
-    GraftTable.retryStaleListing(maxRetries)(f(read(readLog)))
+    GraftTable.retryStaleListing(maxRetries) {
+      val (dirs, df) = readListed(readLog)
+      // Spark lists each dir's files while `df` is built. A digest that
+      // commits meanwhile renames its new block in BEFORE it deletes what
+      // it consumed, so a listed dir emptied under that listing (read as
+      // zero rows, no error) always shows as a changed dir set here
+      if (snapshotDirs(readLog) != dirs) throw new java.io.FileNotFoundException(
+        s"table $root: segments changed while listing; relisting")
+      f(df)
+    }
 
   /** Run a DSL query against the table, injecting the sidecar's
     * outlier-resistant extents for hist bucketing (the reference reads

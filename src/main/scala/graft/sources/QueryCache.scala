@@ -4,9 +4,9 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types._
 
 import graft.dsl.{AggOp, IntFilter, QFilter, SybilQuery}
 import graft.functions.BasicHist
@@ -27,19 +27,37 @@ case class CacheOutcome(hits: Int, misses: Int, uncacheable: Int, skipped: Int)
   *   - always-false              → the whole block is skipped (zone map);
   *   - partially overlapping     → block computed fresh, not cached.
   *
+  * The top-up block — the newest sub-64Ki block, which the next
+  * compacting digest folds into a new block and deletes
+  * ([[GraftTable.topUpBlock]]) — is always computed fresh with the full
+  * filter set and counted as uncacheable: a partial written for it would
+  * be dead after one digest, so a rolling dashboard over freshly digested
+  * data would pay a partial write every round and never hit it.
+  *
   * Partials are parquet under `table/cache/<queryKey>/<blockId>` —
   * block dirs are immutable after digest, so a cache entry never goes
   * stale; trim/digest producing new block ids naturally miss.
   *
-  * Job structure is O(1) in the block count: all cache misses are computed
-  * in ONE job (multi-path scan, block id recovered from the input file
-  * path, partitioned write into the cache layout); all partially-covered
-  * blocks in one more; hits are one multi-path read. The driver never
-  * loops jobs over blocks — the pattern that melts down at 100 TB.
+  * Job structure is O(1) in the block count, and a run with no miss
+  * launches no job until its result is consumed:
+  *   - all cache misses are ONE job (multi-path scan, block id cut from
+  *     the input file path, partitioned write into the cache layout);
+  *   - hits and the just-written misses are one multi-path read, the
+  *     partially-covered blocks and the top-up block one more scan, and
+  *     both feed one merge aggregate.
+  * Every schema comes from one sidecar snapshot per run, never from a
+  * parquet footer job: block dirs read under the column registry
+  * (`TableInfo.columns`, sybil's info.db role), so a column some blocks
+  * lack reads as null there; partials read under the analyzed schema of
+  * the partial aggregate over an empty frame of that registry schema.
+  * The driver never loops jobs over blocks — the pattern that melts down
+  * at 100 TB.
   *
-  * Supported ops: Count / Sum / Avg (sums are decimal partials, so the
-  * merge is exact) and Hist — flat, log-scaled, nested AND the tdigest
-  * quantile flavor: the exact flavors persist their RAW mergeable buffer
+  * Supported ops ([[QueryCache.refusal]] is the gate): Count / Sum / Avg
+  * (sums are decimal partials, so the merge is exact), approx Distinct
+  * (per-block HLL sketches; union is register-wise max) and Hist — flat,
+  * log-scaled, nested AND the tdigest quantile flavor: the exact flavors
+  * persist their RAW mergeable buffer
   * ([[graft.functions.HistBuf]]: bucket counts + moments + outlier
   * side-arrays) with the flavor and bucket layout pinned by the sidecar
   * extents and folded into the cache key, so the merged result is
@@ -188,39 +206,14 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
   }
 
   /** Run `q` against the table with per-block partial caching. Supports
-    * Count/Sum/Avg ops without time bucketing/samples (others: use
-    * `q.run(table.read())`).
+    * the shapes [[QueryCache.refusal]] admits (others: `table.query(q)`).
     */
   def run(q: SybilQuery): (DataFrame, CacheOutcome) = {
-    require(!q.samples && q.timeBucket.isEmpty, "cache supports plain aggregations")
-    // distinct-limit returns scan-order-dependent key tuples, not a
-    // mergeable partial — caching per-block HLL partials for it would
-    // silently answer the wrong query shape
-    require(q.distinctLimit.isEmpty,
-      "-distinct-limit is not cacheable (early-exit key sample, not an " +
-        "aggregate); run uncached")
-    require(q.op == AggOp.CountOp || q.op == AggOp.AvgOp || q.op == AggOp.SumOp ||
-      q.op == AggOp.HistOp || q.op == AggOp.DistinctOp(false),
-      s"op ${q.op} not cacheable (exact distinct partials are the full value" +
-        " sets — cache the approx flavor, or run uncached)")
-    // the tdigest flavor caches its own deterministic partial
-    // (QuantileBins — the randomized-sketch order-dependence that made it
-    // uncacheable through r10 is designed out); weight stays forbidden,
-    // the same rule the uncached run enforces
-    if (q.useTDigest) require(q.weightCol.isEmpty,
-      "-tdigest does not support -weight-col (the quantile summary " +
-        "takes no weight); use the exact hist flavors for weighted " +
-        "histograms")
-    // weighted parity holds only for integer weights: per-block Counts
-    // are long sums, and a fractional weight would truncate per block
-    // where the uncached run truncates once globally
-    for (wc <- q.weightCol) {
-      val dt = table.read().schema.fields.find(_.name == wc).map(_.dataType)
-      require(QueryCache.integerWeightType(dt),
-        s"cache requires an integer weight column; $wc is " +
-        s"${dt.getOrElse("missing")} (per-block long truncation would " +
-        "diverge from the uncached run); run uncached")
-    }
+    // ONE sidecar snapshot per run: block stats, the top-up block and
+    // every schema below come from it, never from a parquet footer job
+    val snap = table.reconciled()
+    QueryCache.refusal(q, snap.columns).foreach(why =>
+      throw new IllegalArgumentException(why))
     // loghist caches its OWN partial flavor (LogHistPartialAggregator) and
     // the flavor is part of the cache key, so flat and log partials for the
     // same filters can never merge into each other
@@ -229,15 +222,10 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     // cache, so layout drift invalidates naturally
     val extents: Map[String, (Long, Long)] =
       if (q.op != AggOp.HistOp || q.useTDigest) Map.empty
-      else {
-        val fromInfo = table.info().columns.collect {
-          case ColumnInfo(n, _, Some(mn), Some(mx)) if q.aggCols.contains(n) =>
-            n -> (mn, mx)
-        }.toMap
-        q.aggCols.foreach(c => require(fromInfo.contains(c),
-          s"hist cache needs sidecar extents for '$c' (run rebuild)"))
-        fromInfo
-      }
+      else snap.columns.collect {
+        case ColumnInfo(n, _, Some(mn), Some(mx)) if q.aggCols.contains(n) =>
+          n -> (mn, mx)
+      }.toMap
 
     val (timeFilters, rest) = q.filters.partition {
       case IntFilter(n, _, _) => n == q.timeCol
@@ -248,12 +236,14 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     val key = queryKey(q, timeFilters, extents)
 
     // zero-job classification: block time extents come from segment stats
-    // recorded at digest
+    // recorded at digest. The top-up block is never cached: the next
+    // compacting digest folds it into a new block and deletes it.
+    val topUp = table.topUpBlock(snap).map(_.id)
     var hitPaths = List.empty[Path]
     var missIds = List.empty[String]
     var uncacheableIds = List.empty[String]
     var skipped = 0
-    for (s <- table.blockSegments) {
+    for (s <- snap.segments if s.kind == "block") {
       val extent = s.stat(q.timeCol).flatMap(c => c.min.zip(c.max))
       val classes = timeFilters.map(f =>
         extent.map { case (lo, hi) => classify(f.asInstanceOf[IntFilter], lo, hi) }
@@ -265,84 +255,91 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
       val noNullTimes = timeFilters.isEmpty ||
         s.stat(q.timeCol).exists(_.cnt == s.rows)
       if (classes.contains(AlwaysFalse)) skipped += 1
-      else if (classes.forall(_ == AlwaysTrue) && noNullTimes) {
+      else if (classes.forall(_ == AlwaysTrue) && noNullTimes &&
+          !topUp.contains(s.id)) {
         val dest = table.cacheRoot.resolve(key).resolve(s.id)
         if (Files.exists(dest)) hitPaths ::= dest else missIds ::= s.id
       } else uncacheableIds ::= s.id
     }
 
+    // block dirs read under the sidecar's type registry (sybil's info.db
+    // role): no schema-inference job, and a column that some blocks lack
+    // reads as null there. A registry type string that does not parse back
+    // (a struct field name needing quotes) leaves its column out: a query
+    // naming it fails to resolve, loudly, and no other query needs it.
+    val blockSchema = StructType(snap.columns.flatMap(c =>
+      scala.util.Try(DataType.fromDDL(c.dtype)).toOption.map(StructField(c.name, _))))
+    def blocks(ids: Seq[String]): DataFrame =
+      spark.read.schema(blockSchema).parquet(ids.map(table.blockPath(_).toString): _*)
+    val noRows = spark.createDataFrame(java.util.List.of[Row](), blockSchema)
+
     // ONE job computes every miss block's partial: multi-path scan, block
-    // id recovered from the file path, partitioned write straight into the
+    // id cut from the file path, partitioned write straight into the
     // cache layout (cache/<key>/<blockId>).
-    val missPartials: Option[DataFrame] =
-      if (missIds.isEmpty) None
-      else {
-        val dirs = missIds.map(id => table.blockPath(id).toString)
-        // greedy .* pins the LAST /blocks/ component (a table rooted
-        // under a path containing "blocks" would otherwise extract the
-        // root segment and silently drop every miss block's rows — the
-        // GraftTable.rebuild regex discipline)
-        val withBlock = spark.read.parquet(dirs: _*)
-          .withColumn("__block",
-            regexp_extract(input_file_name(), ".*/blocks/([^/]+)/", 1))
-        val p = partial(withBlock, q, rest, extents, extraKeys = Seq("__block"))
-        val tmp = table.cacheRoot.resolve(key).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-        p.write.partitionBy("__block").mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val written = {
-          val s = Files.list(tmp)
-          try s.iterator().asScala
-            .filter(d => d.getFileName.toString.startsWith("__block=")).toSeq
-          finally s.close()
-        }
-        written.foreach { d =>
-          val id = d.getFileName.toString.stripPrefix("__block=")
-          val dest = table.cacheRoot.resolve(key).resolve(id)
-          // a concurrent run may have published the same partial between
-          // our existence check and the move — the loser just discards
-          // (block partials for the same key are identical by construction).
-          // POSIX surfaces the lost race as any FileSystemException
-          // (FileAlreadyExists, DirectoryNotEmpty, ...) — benign iff dest
-          // now exists; anything else is a real I/O failure and propagates.
-          if (!Files.exists(dest))
-            try Files.move(d, dest, StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case e: java.nio.file.FileSystemException =>
-                if (!Files.exists(dest)) throw e
-            }
-        }
-        locally {
-          val s = Files.walk(tmp)
-          try s.sorted(java.util.Comparator.reverseOrder[Path]())
-            .iterator().asScala.foreach(Files.delete)
-          finally s.close()
-        }
-        // a block whose partial has zero groups writes no dir — read only
-        // what exists (it will recompute next run; empty is cheap anyway)
-        val readable = missIds.map(id => table.cacheRoot.resolve(key).resolve(id))
-          .filter(Files.exists(_)).map(_.toString)
-        if (readable.isEmpty) None else Some(spark.read.parquet(readable: _*))
+    if (missIds.nonEmpty) {
+      // the LAST /blocks/ component names the block (a table rooted under
+      // a path containing "blocks" must not take the root's segment)
+      val withBlock = blocks(missIds).withColumn("__block",
+        substring_index(substring_index(input_file_name(), "/blocks/", -1), "/", 1))
+      val p = partial(withBlock, q, rest, extents, extraKeys = Seq("__block"))
+      val tmp = table.cacheRoot.resolve(key).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+      p.write.partitionBy("__block").mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val written = {
+        val s = Files.list(tmp)
+        try s.iterator().asScala
+          .filter(d => d.getFileName.toString.startsWith("__block=")).toSeq
+        finally s.close()
       }
+      written.foreach { d =>
+        val id = d.getFileName.toString.stripPrefix("__block=")
+        val dest = table.cacheRoot.resolve(key).resolve(id)
+        // a concurrent run may have published the same partial between
+        // our existence check and the move — the loser just discards
+        // (block partials for the same key are identical by construction).
+        // POSIX surfaces the lost race as any FileSystemException
+        // (FileAlreadyExists, DirectoryNotEmpty, ...) — benign iff dest
+        // now exists; anything else is a real I/O failure and propagates.
+        if (!Files.exists(dest))
+          try Files.move(d, dest, StandardCopyOption.ATOMIC_MOVE)
+          catch {
+            case e: java.nio.file.FileSystemException =>
+              if (!Files.exists(dest)) throw e
+          }
+      }
+      locally {
+        val s = Files.walk(tmp)
+        try s.sorted(java.util.Comparator.reverseOrder[Path]())
+          .iterator().asScala.foreach(Files.delete)
+        finally s.close()
+      }
+    }
 
-    // hits: one multi-path read over all cached partials
-    val hitPartials: Option[DataFrame] =
-      if (hitPaths.isEmpty) None else Some(spark.read.parquet(hitPaths.map(_.toString): _*))
+    // hits and just-written misses: one multi-path read under the
+    // partial's analyzed schema. A block whose partial has zero groups
+    // writes no dir — read only what exists (it recomputes next run;
+    // empty is cheap anyway).
+    val cached = hitPaths ++ missIds.map(id => table.cacheRoot.resolve(key).resolve(id))
+      .filter(Files.exists(_))
+    val cachedPartials: Option[DataFrame] =
+      if (cached.isEmpty) None
+      else Some(spark.read.schema(partial(noRows, q, rest, extents).schema)
+        .parquet(cached.map(_.toString): _*))
 
-    // partially-covered blocks: one job with the FULL filter set
+    // partially-covered blocks and the top-up block: one scan with the
+    // FULL filter set
     val uncachedPartials: Option[DataFrame] =
       if (uncacheableIds.isEmpty) None
-      else Some(partial(
-        spark.read.parquet(uncacheableIds.map(id => table.blockPath(id).toString): _*),
-        q, q.filters, extents))
+      else Some(partial(blocks(uncacheableIds), q, q.filters, extents))
 
     // all-blocks-skipped still takes the normal merge path over an EMPTY
     // partial frame, so the zero-row result carries the MERGED output
     // schema (x_avg/x_hist/Distinct), not the partial-stage one — a
     // caller selecting output columns from an empty result must not
     // throw
-    val parts0 = Seq(missPartials, hitPartials, uncachedPartials).flatten
+    val parts0 = Seq(cachedPartials, uncachedPartials).flatten
     val parts =
       if (parts0.nonEmpty) parts0
-      else Seq(partial(table.read().limit(0), q, q.filters, extents))
+      else Seq(partial(noRows, q, q.filters, extents))
     val out = {
       val merged = parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = false))
       val keys = q.groups.map(col)
@@ -407,19 +404,48 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
 }
 
 object QueryCache {
-  /** THE integer-weight type gate — shared by [[QueryCache.run]]'s
-    * loud precondition and Cli's silent fall-back-to-uncached predicate
-    * (one copy: a widened/narrowed cache gate must move both sites or
-    * the CLI either aborts with the cache's exception or needlessly
-    * skips it). Absent column (None) passes — the run will fail on its
-    * own terms. */
-  def integerWeightType(
-      dt: Option[org.apache.spark.sql.types.DataType]): Boolean =
-    dt.forall {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
+  /** THE cacheability gate: why `q` cannot run through the cache on a
+    * table with column registry `columns`, or None when it can.
+    * [[QueryCache.run]] throws it; Cli falls back to the uncached run on
+    * it. Reads only the registry (no Spark job). */
+  def refusal(q: SybilQuery, columns: Seq[ColumnInfo]): Option[String] = {
+    val weightType = q.weightCol.map(wc =>
+      columns.find(_.name == wc).map(c => DataType.fromDDL(c.dtype)))
+    // an absent column passes: the run fails on its own terms
+    val integerWeight = weightType.forall(_.forall {
+      case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
-    }
+    })
+    val noExtents = if (q.op != AggOp.HistOp || q.useTDigest) None
+      else q.aggCols.find(c => !columns.exists(ci =>
+        ci.name == c && ci.min.nonEmpty && ci.max.nonEmpty))
+    if (q.samples || q.timeBucket.nonEmpty)
+      Some("cache supports plain aggregations")
+    // distinct-limit returns scan-order-dependent key tuples, not a
+    // mergeable partial — caching per-block HLL partials for it would
+    // silently answer the wrong query shape
+    else if (q.distinctLimit.nonEmpty)
+      Some("-distinct-limit is not cacheable (early-exit key sample, not an " +
+        "aggregate); run uncached")
+    else if (!(q.op == AggOp.CountOp || q.op == AggOp.AvgOp || q.op == AggOp.SumOp ||
+        q.op == AggOp.HistOp || q.op == AggOp.DistinctOp(false)))
+      Some(s"op ${q.op} not cacheable (exact distinct partials are the full value" +
+        " sets — cache the approx flavor, or run uncached)")
+    // the tdigest flavor caches its own deterministic partial
+    // (QuantileBins); weight stays forbidden, the same rule the uncached
+    // run enforces
+    else if (q.useTDigest && q.weightCol.nonEmpty)
+      Some("-tdigest does not support -weight-col (the quantile summary " +
+        "takes no weight); use the exact hist flavors for weighted " +
+        "histograms")
+    // weighted parity holds only for integer weights: per-block Counts
+    // are long sums, and a fractional weight would truncate per block
+    // where the uncached run truncates once globally
+    else if (!integerWeight)
+      Some(s"cache requires an integer weight column; ${q.weightCol.get} is " +
+        s"${weightType.flatten.get} (per-block long truncation would " +
+        "diverge from the uncached run); run uncached")
+    else noExtents.map(c =>
+      s"hist cache needs sidecar extents for '$c' (run rebuild)")
+  }
 }

@@ -63,10 +63,12 @@ class AsOfCacheSpec extends SparkSpec {
     val t = new GraftTable(spark, root)
     // three blocks with disjoint time ranges: [0,999], [1000,1999], [2000,2999]
     // (compact=false keeps them separate, standing in for full 64Ki blocks)
-    for (b <- 0 until 3) {
+    val made = (0 until 3).map { b =>
+      val before = t.blockIds.toSet
       t.ingest((0 until 1000).map(i =>
         (s"k${i % 4}", (b * 1000 + i).toLong, (i % 50).toLong)).toDF("k", "time", "v"))
       t.digest(compact = false)
+      (t.blockIds.toSet -- before).head
     }
     assert(t.blockIds.size === 3)
     val cache = new QueryCache(spark, t)
@@ -74,13 +76,16 @@ class AsOfCacheSpec extends SparkSpec {
     def q(cutoff: Long) = SybilQuery().groupBy("k").aggregate("v")
       .withOp(AggOp.AvgOp).intFilterGt("time", cutoff).limitTo(100)
 
-    // cutoff 500: block0 partial, blocks 1+2 fully covered → 2 misses
+    // block2 is the newest sub-64Ki block: the next compacting digest
+    // refolds it, so it is computed fresh, never cached (uncacheable)
+    assert(t.topUpBlock(t.info()).map(_.id) === Some(made(2)))
+    // cutoff 500: block0 partial, block1 fully covered → 1 miss
     val (r1, o1) = cache.run(q(500))
-    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 2, uncacheable = 1, skipped = 0))
-    // rolling cutoff 700: blocks 1+2 still fully covered → 2 HITS (resistance)
-    // Classification must be pure sidecar arithmetic: ZERO Spark jobs until
-    // the result is consumed (the 100-TB requirement — no per-block driver
-    // job loops).
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 1, uncacheable = 2, skipped = 0))
+    // rolling cutoff 700: block1 still fully covered → a HIT (resistance)
+    // Classification must be pure sidecar arithmetic and every schema
+    // comes from the sidecar: ZERO Spark jobs until the result is consumed
+    // (the 100-TB requirement — no per-block driver job loops).
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -92,15 +97,13 @@ class AsOfCacheSpec extends SparkSpec {
       try {
         val res = cache.run(q(700))
         Thread.sleep(500) // listener bus drain
-        // block classification itself is sidecar arithmetic (0 jobs); the
-        // only jobs are the ≤2 parquet schema-inference footer reads of the
-        // two multi-path scans (hits, uncacheable) — constant per run,
-        // independent of block count
-        assert(jobs.get <= 2,
+        // no miss to write, and the hit/uncacheable scans take their
+        // schemas from the sidecar: no footer schema-inference job
+        assert(jobs.get === 0,
           s"cache run launched ${jobs.get} jobs — must be O(1), not O(blocks)")
         res
       } finally spark.sparkContext.removeSparkListener(listener)
-    assert(o2.hits === 2 && o2.misses === 0 && o2.uncacheable === 1)
+    assert(o2 === graft.sources.CacheOutcome(hits = 1, misses = 0, uncacheable = 2, skipped = 0))
     // cutoff 2500: blocks 0,1 always-false → skipped; block2 partial
     val (_, o3) = cache.run(q(2500))
     assert(o3.skipped === 2 && o3.uncacheable === 1 && o3.hits === 0)
@@ -149,10 +152,11 @@ class AsOfCacheSpec extends SparkSpec {
     val q = SybilQuery().groupBy("k").aggregate("v").withOp(AggOp.HistOp).limitTo(10)
     val (r1, o1) = cache.run(q)
     val cached1 = r1.collect()
-    assert(o1.misses === 2)
-    // second run: all hits, identical result
+    // block1 is the top-up block the next digest refolds: computed fresh
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 1, uncacheable = 1, skipped = 0))
+    // second run: block0 hits, identical result
     val (r2, o2) = cache.run(q)
-    assert(o2.hits === 2 && o2.misses === 0)
+    assert(o2 === graft.sources.CacheOutcome(hits = 1, misses = 0, uncacheable = 1, skipped = 0))
     // exact equality vs the uncached DSL run with the same sidecar extents
     val extents = t.info().columns.collect {
       case graft.sources.ColumnInfo(n, _, Some(mn), Some(mx)) => n -> (mn, mx)
@@ -203,17 +207,18 @@ class AsOfCacheSpec extends SparkSpec {
     val cache = new QueryCache(spark, t)
     val q = SybilQuery().groupBy("k").distinct("v").limitTo(10)
 
+    // the newest block is the top-up block: computed fresh, never cached
     val (r1, o1) = cache.run(q)
-    assert(o1.misses === 3 && o1.hits === 0)
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 2, uncacheable = 1, skipped = 0))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3))).sortBy(_._1)
     val first = canon(r1)
     // the cached merge must equal the UNCACHED single-pass DSL run exactly
     // (register-wise max union is deterministic, not just approximately right)
     assert(first === canon(q.run(t.read())))
-    // second run: all sketches served from the cache, same answer
+    // second run: every cacheable sketch served from the cache, same answer
     val (r2, o2) = cache.run(q)
-    assert(o2.hits === 3 && o2.misses === 0)
+    assert(o2 === graft.sources.CacheOutcome(hits = 2, misses = 0, uncacheable = 1, skipped = 0))
     assert(canon(r2) === first)
     // exact distinct is NOT cacheable (partials would be the value sets)
     val ex = intercept[IllegalArgumentException] {
@@ -243,15 +248,16 @@ class AsOfCacheSpec extends SparkSpec {
       .tDigestHistogram.limitTo(10)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
+    // the newest block is the top-up block: computed fresh, never cached
     val (r1, o1) = cache.run(q)
-    assert(o1.misses === 3 && o1.hits === 0)
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 2, uncacheable = 1, skipped = 0))
     val first = canon(r1)
     // the whole surface — count/samples/mean/min/max/percentiles — must
     // equal the UNCACHED single-pass DSL run exactly (the QuantileBins
     // multiset homomorphism, not just approximately right)
     assert(first === canon(q.run(t.read())))
     val (r2, o2) = cache.run(q)
-    assert(o2.hits === 3 && o2.misses === 0)
+    assert(o2 === graft.sources.CacheOutcome(hits = 2, misses = 0, uncacheable = 1, skipped = 0))
     assert(canon(r2) === first)
     // weighted + tdigest stays a loud error on the cached path too
     val ex = intercept[IllegalArgumentException] {
@@ -280,11 +286,13 @@ class AsOfCacheSpec extends SparkSpec {
       .tDigestHistogram.limitTo(10)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
+    // the newest block is the top-up block: computed fresh, never cached
     val (r1, o1) = cache.run(q)
-    assert(o1.misses === 3)
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 2, uncacheable = 1, skipped = 0))
     assert(canon(r1) === canon(q.run(t.read())))
     val (r2, o2) = cache.run(q)
-    assert(o2.hits === 3 && canon(r2) === canon(r1))
+    assert(o2 === graft.sources.CacheOutcome(hits = 2, misses = 0, uncacheable = 1, skipped = 0))
+    assert(canon(r2) === canon(r1))
   }
 
   test("query cache: multi-column HLL distinct hashes the same item strings") {
@@ -308,11 +316,12 @@ class AsOfCacheSpec extends SparkSpec {
     val q = SybilQuery().groupBy("k").distinct("v1", "v2").limitTo(10)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(3))).sortBy(_._1)
+    // the newest block is the top-up block: computed fresh, never cached
     val (r1, o1) = cache.run(q)
-    assert(o1.misses === 3 && o1.hits === 0)
+    assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 2, uncacheable = 1, skipped = 0))
     assert(canon(r1) === canon(q.run(t.read())))
     val (r2, o2) = cache.run(q)
-    assert(o2.hits === 3 && o2.misses === 0)
+    assert(o2 === graft.sources.CacheOutcome(hits = 2, misses = 0, uncacheable = 1, skipped = 0))
     assert(canon(r2) === canon(r1))
   }
 
@@ -354,5 +363,37 @@ class AsOfCacheSpec extends SparkSpec {
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|"))
     assert(canon(res) === canon(q.run(t.read())))
+  }
+
+  test("query cache: a column only the older blocks carry reads as null in " +
+      "the others (cached == uncached)") {
+    // blocks 0,1 carry `region`, blocks 2,3 do not; block 2 is a cache
+    // miss and block 3 the top-up block, so both scans see the gap. The
+    // cache reads every block under the sidecar's type registry, never a
+    // schema inferred from whichever block's footer comes first (which
+    // failed with UNRESOLVED_COLUMN depending on the random block ids).
+    for (n <- 0 until 5) {
+      val t = new GraftTable(spark, SparkSpec.tempDir(s"graft-qc-cols-$n").toString)
+      for (b <- 0 until 4) {
+        val rows = (0 until 60).map(i => (s"k${i % 2}", (b * 100 + i).toLong,
+          (i % 9).toLong, s"r${(i + b) % 3}"))
+        val df = rows.toDF("k", "time", "v", "region")
+        t.ingest(if (b < 2) df else df.drop("region"))
+        t.digest(compact = false)
+      }
+      val cache = new QueryCache(spark, t)
+      val q = SybilQuery().groupBy("region").aggregate("v")
+        .withOp(AggOp.AvgOp).intFilterGt("time", -1).limitTo(10)
+      def canon(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+      val uncached = canon(t.query(q))
+      assert(uncached.map(_.head).toSet === Set("", "r0", "r1", "r2"))
+      val (r1, o1) = cache.run(q)
+      assert(o1 === graft.sources.CacheOutcome(hits = 0, misses = 3, uncacheable = 1, skipped = 0))
+      assert(canon(r1) === uncached, s"table $n: cached miss run")
+      val (r2, o2) = cache.run(q)
+      assert(o2.hits === 3)
+      assert(canon(r2) === uncached, s"table $n: cached hit run")
+    }
   }
 }

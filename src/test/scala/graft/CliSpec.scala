@@ -149,6 +149,30 @@ class CliSpec extends SparkSpec {
       .exists(_.toString.endsWith(".csv.gz")))
   }
 
+  test("CLI -distinct runs through the cache and prints the uncached JSON") {
+    import spark.implicits._
+    val db = SparkSpec.tempDir("graft-cli-distinct").toString
+    // two blocks: the older one is cacheable, the newer one is the top-up
+    // block the next digest refolds
+    val t = new graft.sources.GraftTable(spark, s"$db/events")
+    for (b <- 0 until 2) {
+      t.ingest((0 until 80).map(i => (s"h${i % 3}", (1700000000 + b * 100 + i).toLong,
+        s"u${(i * 7 + b) % 23}")).toDF("host", "time", "user"))
+      t.digest(compact = false)
+    }
+    def run(extra: String*) = captureOut {
+      Cli.main(Array("query", "-dir", db, "-table", "events",
+        "-group", "host", "-distinct", "user", "-json") ++ extra)
+    }
+    val uncached = run()
+    assert(mapper.readTree(uncached).get("results").size() === 3)
+    val cacheRoot = java.nio.file.Paths.get(db, "events", "cache")
+    assert(!Files.exists(cacheRoot))
+    assert(run("-cache-queries") === uncached, "cached miss run")
+    assert(Files.exists(cacheRoot), "-distinct must run through the cache")
+    assert(run("-cache-queries") === uncached, "cached hit run")
+  }
+
   test("CLI inspect dumps sidecar stats for a table and schema for raw parquet") {
     val db = SparkSpec.tempDir("graft-cli-inspect").toString
     val data = SparkSpec.tempDir("graft-cli-inspect-data")

@@ -204,12 +204,20 @@ class IngestSpec extends SparkSpec {
       if (!Files.exists(cacheRoot)) Nil
       else Files.list(cacheRoot).iterator().asScala.toSeq
         .map(_.resolve(id)).filter(Files.exists(_))
-    assert(partialDirs(b0).nonEmpty, "the miss must have cached a partial")
-    // plant sweep-test entries under an existing cache key: an in-flight
-    // .tmp- publish (must SURVIVE the sweep) and a dead-block orphan (the
-    // late-publish case the targeted GC misses — must be swept)
-    val someKey = Files.list(cacheRoot).iterator().asScala
-      .filter(Files.isDirectory(_)).next()
+    // b0 is the top-up block the next compacting digest refolds: the
+    // cache computes it fresh and writes no partial for it
+    assert(t.topUpBlock(t.info()).map(_.id) === Some(b0))
+    assert(partialDirs(b0).isEmpty, "the top-up block must not be cached")
+    // plant a partial under b0's id as a cache that did cache it would
+    // have (cache/<key>/<blockId>/part-*.parquet), plus sweep-test
+    // entries under the same key: an in-flight .tmp- publish (must
+    // SURVIVE the sweep) and a dead-block orphan (the late-publish case
+    // the targeted GC misses — must be swept)
+    val someKey = cacheRoot.resolve("planted-key")
+    def plant(id: String): Unit =
+      spark.range(3).toDF("Count").write.parquet(someKey.resolve(id).toString)
+    plant(b0)
+    assert(partialDirs(b0).nonEmpty)
     val inflight = someKey.resolve(".tmp-inflight")
     Files.createDirectories(inflight)
     Files.writeString(inflight.resolve("part-0"), "in-flight publish")
@@ -226,8 +234,7 @@ class IngestSpec extends SparkSpec {
     assert(!Files.exists(orphan), "sweep must remove orphans of dead blocks")
     // and trim GCs the partials of the blocks it deletes
     val b1 = t.blockIds.head
-    cache.run(graft.dsl.SybilQuery().groupBy("k")
-      .intFilterGt("time", -1).limitTo(100))
+    plant(b1)
     assert(partialDirs(b1).nonEmpty)
     t.trim(olderThan = Some(10000L))
     assert(t.blockIds.isEmpty && partialDirs(b1).isEmpty)
@@ -240,6 +247,12 @@ class IngestSpec extends SparkSpec {
     t.ingest((1 until 2000).map(i => (s"k${i % 2}", i.toLong, (i % 500 + 1).toLong))
       .toDF("k", "time", "v"))
     t.digest()
+    // one more small block: it is the top-up block the next digest
+    // refolds (computed fresh every run), so the first block is the one
+    // whose partials the flavors below hit and miss on
+    t.ingest((2000 until 2100).map(i => (s"k${i % 2}", i.toLong, (i % 500 + 1).toLong))
+      .toDF("k", "time", "v"))
+    t.digest(compact = false)
     val cache = new graft.sources.QueryCache(spark, t)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.selectExpr("k", "Count", "v_hist.count", "v_hist.mean",
@@ -668,5 +681,55 @@ class IngestSpec extends SparkSpec {
     assert(t2.read(readLog = true).count() === 100) // but no duplicate rows
     assert(!t2.ingestIdempotent(batch, "ckpt#1"))  // now recorded
     assert(Files.readAllLines(ledger).size === 2)
+  }
+
+  test("compacting digest tops up the NEWEST sub-64Ki block, not the " +
+      "greatest id") {
+    import spark.implicits._
+    // block ids are random UUIDs, so over 10 fresh tables an id-ordered
+    // choice would pick the older block about half the time
+    for (n <- 0 until 10) {
+      val t = new GraftTable(spark, tmpDir(s"graft-topup-$n"))
+      def block(from: Int, compact: Boolean): String = {
+        val before = t.blockIds.toSet
+        t.ingest((from until from + 20).map(i => (i.toLong, s"u${i % 3}"))
+          .toDF("time", "user"))
+        t.digest(compact = compact)
+        (t.blockIds.toSet -- before).head
+      }
+      val older = block(0, compact = false)
+      val newer = block(20, compact = false)
+      assert(t.topUpBlock(t.info()).map(_.id) === Some(newer))
+      block(40, compact = true)
+      assert(!t.blockIds.contains(newer), s"table $n: the newer block must be refolded")
+      assert(t.blockIds.contains(older), s"table $n: the older block must be kept")
+      assert(t.read().count() === 60)
+    }
+  }
+
+  test("a four-week history block keeps the table's time minimum through " +
+      "minute-wide digests") {
+    import spark.implicits._
+    // the dashboard shape: 100k history rows over four weeks, then ten
+    // 2k-row ingest+digest rounds one minute each. The history's extreme
+    // must not be judged against the much smaller newest block (leave-one-
+    // out sigma of seconds, and an E[x^2]-mean^2 that cancels in doubles).
+    val t = new GraftTable(spark, tmpDir("graft-extent-history"))
+    val now = 1700000000L
+    val span = 28L * 24 * 3600
+    val history = (0 until 100000).map(i => now - span + 2 + i * (span - 2) / 100000)
+    t.ingest(history.map(ts => (ts, ts % 97)).toDF("time", "v"))
+    t.digest()
+    val trueMin = history.min
+    for (r <- 0 until 10) {
+      t.ingest((0 until 2000).map { i =>
+        val ts = now + r * 60L + i * 60L / 2000
+        (ts, ts % 97)
+      }.toDF("time", "v"))
+      t.digest()
+      val tc = t.info().columns.find(_.name == "time").get
+      assert(tc.min.contains(trueMin), s"round $r: sidecar time min ${tc.min}, true $trueMin")
+      assert(tc.max.contains(now + r * 60L + 59L))
+    }
   }
 }
