@@ -264,8 +264,9 @@ object Cli {
         // THE cache gate (QueryCache.refusal, read from the sidecar): a
         // shape the cache refuses falls back to the uncached run instead
         // of aborting the CLI with the cache's IllegalArgumentException
+        val readLog = f.contains("read-log")
         val cacheable = f.contains("cache-queries") &&
-          QueryCache.refusal(q, table.info().columns).isEmpty
+          QueryCache.refusal(q, table.info().columns, readLog).isEmpty
         // retry on a stale plan-time listing when a concurrent digest
         // consumed segments mid-query — the reference CLI's "BLOCK SIZE
         // CHANGED" re-run (table_query.go); each attempt re-plans on a
@@ -273,7 +274,7 @@ object Cli {
         graft.sources.GraftTable.retryStaleListing() {
           val result =
             if (cacheable) new QueryCache(spark, table).run(q)._1
-            else table.query(q, readLog = f.contains("read-log"))
+            else table.query(q, readLog)
           if (f.contains("json")) println(Printer.toJsonEnvelope(result))
           else if (q.op == AggOp.HistOp)
             Printer.printHistConsole(result, q.limit.getOrElse(100))

@@ -31,7 +31,14 @@ case class SegmentInfo(id: String, kind: String, rows: Long, stats: Seq[ColStat]
   * count, plus the per-segment stats list. */
 case class ColumnInfo(name: String, dtype: String, min: Option[Long], max: Option[Long])
 case class TableInfo(rowCount: Long, columns: Seq[ColumnInfo],
-    segments: Seq[SegmentInfo] = Nil)
+    segments: Seq[SegmentInfo] = Nil) {
+  /** The merged int extents per column (the reference's stored IntInfo,
+    * table_column_info.go): what hist bucketing reads through
+    * [[graft.dsl.SybilQuery.withExtents]] instead of rescanning. */
+  def extents: Map[String, (Long, Long)] = columns.collect {
+    case ColumnInfo(n, _, Some(mn), Some(mx)) => n -> (mn, mx)
+  }.toMap
+}
 
 /** A graft table on disk: append-only ingest log + immutable digested
   * blocks, coordinated purely via the filesystem — the Spark-native
@@ -168,9 +175,9 @@ class GraftTable(spark: SparkSession, root: String) {
     schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
 
   /** The ONE stats aggregate list — shared by the post-hoc scan
-    * ([[segmentStats]]) and the in-flight `observe()` path so the two can
-    * never drift: row count + per-long column (min, max, cnt, sum,
-    * sumsq). */
+    * ([[segmentStats]]), the in-flight `observe()` path and [[rebuild]]
+    * so they can never drift: row count + per-long column (min, max, cnt,
+    * sum, sumsq). */
   private def statAggs(longCols: Seq[String]): Seq[Column] =
     Seq(count(lit(1)).as("__rows")) ++ longCols.flatMap { c =>
       Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
@@ -531,7 +538,7 @@ class GraftTable(spark: SparkSession, root: String) {
       else {
         val df = readDirs(dirs)
         val schema = df.schema
-        val longCols = schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
+        val longCols = longColsOf(schema)
         // greedy .* pins the match to the LAST /ingest|blocks/ component:
         // a table ROOTED under a path containing "blocks" or "ingest"
         // (e.g. /data/blocks/t1) would otherwise match the root component
@@ -540,26 +547,13 @@ class GraftTable(spark: SparkSession, root: String) {
           ".*/(ingest|blocks)/([^/]+)/", 2)
         val kindC = regexp_extract(input_file_name(),
           ".*/(ingest|blocks)/([^/]+)/", 1)
-        val aggs = Seq(count(lit(1)).as("__rows")) ++ longCols.flatMap { c =>
-          Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
-            count(col(c)).as(s"ct_$c"),
-            sum(col(c).cast(DoubleType)).as(s"sm_$c"),
-            sum(col(c).cast(DoubleType) * col(c).cast(DoubleType)).as(s"sq_$c"))
-        }
+        val aggs = statAggs(longCols)
         val rows = df.groupBy(seg.as("__seg"), kindC.as("__kind"))
           .agg(aggs.head, aggs.tail: _*).collect()
         val segs = rows.toSeq.map { r =>
-          val stats = longCols.map { c =>
-            ColStat(c,
-              Option(r.getAs[Any](s"mn_$c")).map(_.asInstanceOf[Long]),
-              Option(r.getAs[Any](s"mx_$c")).map(_.asInstanceOf[Long]),
-              r.getAs[Long](s"ct_$c"),
-              Option(r.getAs[Any](s"sm_$c")).map(_.asInstanceOf[Double]).getOrElse(0.0),
-              Option(r.getAs[Any](s"sq_$c")).map(_.asInstanceOf[Double]).getOrElse(0.0))
-          }
           SegmentInfo(r.getAs[String]("__seg"),
             if (r.getAs[String]("__kind") == "ingest") "log" else "block",
-            r.getAs[Long]("__rows"), stats)
+            r.getAs[Long]("__rows"), decodeStats(longCols, r.getAs[Any](_)))
         }
         val registry = schema.fields.toSeq.map(f =>
           ColumnInfo(f.name, typeName(f.dataType), None, None))
@@ -801,7 +795,6 @@ class GraftTable(spark: SparkSession, root: String) {
     // spark.read itself spawns the mergeSchema footer job — tag it apart
     // from the write so file-count-bound work is visible separately
     val df = withJobDesc("graft.digest.schema")(readDirs(logs ++ consumedBlocks))
-    val n = math.max(1L, segRows)
     val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     // the Spark write is the long pole: refresh the lock before and
     // after so a > staleMs compaction isn't broken as "crashed"
@@ -820,34 +813,25 @@ class GraftTable(spark: SparkSession, root: String) {
     // at cluster scale a compaction is then pure streaming I/O, never an
     // all-data shuffle. Stats ride the write (observe) — the post-write
     // rescan is gone; segRows from the sidecar cross-checks for free.
-    // GRAFT_DIGEST_SHUFFLE=1 keeps the legacy path runnable for A/B.
-    val legacyShuffle = sys.env.get("GRAFT_DIGEST_SHUFFLE").contains("1") ||
-      sys.props.get("graft.digest.shuffle").contains("1")
     val splitConf = "spark.sql.files.maxPartitionBytes"
     val openConf = "spark.sql.files.openCostInBytes"
     val prevSplit = spark.conf.getOption(splitConf)
     val prevOpen = spark.conf.getOption(openConf)
     val seg0 =
       try {
-        if (!legacyShuffle) {
-          val bytes = (logs ++ consumedBlocks).map(dirBytes).sum
-          val par = math.max(1, spark.sparkContext.defaultParallelism)
-          val split = math.min(128L << 20,
-            math.max(4L << 20, bytes / (2L * par)))
-          spark.conf.set(splitConf, split.toString)
-          // the default 4 MiB open cost makes every sub-4MiB log file
-          // its own split — a 24-batch log would fan into one task per
-          // file and one TINY output file per task; ingest logs are
-          // exactly the many-small-files shape, so pack them densely
-          spark.conf.set(openConf, (256L << 10).toString)
-        }
+        val bytes = (logs ++ consumedBlocks).map(dirBytes).sum
+        val par = math.max(1, spark.sparkContext.defaultParallelism)
+        val split = math.min(128L << 20,
+          math.max(4L << 20, bytes / (2L * par)))
+        spark.conf.set(splitConf, split.toString)
+        // the default 4 MiB open cost makes every sub-4MiB log file its
+        // own split — a 24-batch log would fan into one task per file and
+        // one TINY output file per task; ingest logs are exactly the
+        // many-small-files shape, so pack them densely
+        spark.conf.set(openConf, (256L << 10).toString)
         observedStats(df, tmp, "block", expectedRows = Some(segRows)) { d =>
           withJobDesc("graft.digest.write") {
-            val out = if (legacyShuffle)
-              d.repartition(math.max(1,
-                (n / ChunkSize).toInt + (if (n % ChunkSize > 0) 1 else 0)))
-            else d
-            out.write
+            d.write
               .option("maxRecordsPerFile", ChunkSize.toLong)
               .option("parquet.block.size", (8L * 1024 * 1024).toString)
               .mode(SaveMode.ErrorIfExists)
@@ -960,10 +944,6 @@ class GraftTable(spark: SparkSession, root: String) {
     listDirs(blocksP).map(_.getFileName.toString).filterNot(supBlocks)
   }
 
-  /** Read one block by id. */
-  def readBlock(id: String): DataFrame =
-    spark.read.parquet(blocksP.resolve(id).toString)
-
   /** Path of one block dir. */
   private[sources] def blockPath(id: String): Path = blocksP.resolve(id)
 
@@ -1019,108 +999,65 @@ class GraftTable(spark: SparkSession, root: String) {
   /** Run a DSL query against the table, injecting the sidecar's
     * outlier-resistant extents for hist bucketing (the reference reads
     * stored IntInfo instead of rescanning — table_column_info.go). */
-  def query(q: graft.dsl.SybilQuery, readLog: Boolean = false): DataFrame = {
-    val extents = info().columns.collect {
-      case ColumnInfo(n, _, Some(mn), Some(mx)) => n -> (mn, mx)
-    }.toMap
-    q.withExtents(extents).run(read(readLog))
-  }
+  def query(q: graft.dsl.SybilQuery, readLog: Boolean = false): DataFrame =
+    q.withExtents(info().extents).run(read(readLog))
 
   /** Blocks that `trim` WOULD delete — the reference's `-list` dry run
-    * (cmd_trim.go:32-36). Pure sidecar arithmetic, deletes nothing. */
+    * (cmd_trim.go:32-36). The same plan [[trim]] executes; deletes
+    * nothing. */
   def trimPlan(maxBytes: Option[Long] = None, olderThan: Option[Long] = None,
-      timeCol: String = "time"): Seq[String] = {
-    val i = reconciled()
-    var out = List.empty[String]
-    olderThan.foreach { cutoff =>
-      for (s <- i.segments if s.kind == "block")
-        if (s.stat(timeCol).flatMap(_.max).exists(_ < cutoff))
-          out ::= blocksP.resolve(s.id).toString
+      timeCol: String = "time"): Seq[String] =
+    trimVictims(reconciled(), maxBytes, olderThan, timeCol).map(blocksP.resolve(_).toString)
+
+  /** THE trim classifier, shared by [[trimPlan]] and [[trim]]: ids of the
+    * blocks whose newest `timeCol` value (sidecar stats) is older than
+    * `olderThan` (unix secs), then of the oldest remaining blocks (by dir
+    * modification time; block dirs are immutable after write) until the
+    * rest fits `maxBytes`, always keeping one. `i` is a [[reconciled]]
+    * snapshot: superseded-but-undeleted dirs (crashed digest) are dead
+    * weight, not live data, so they are never counted. No Spark job. */
+  private def trimVictims(i: TableInfo, maxBytes: Option[Long],
+      olderThan: Option[Long], timeCol: String): Seq[String] = {
+    val blocks = i.segments.filter(_.kind == "block")
+    val aged = olderThan.toSeq.flatMap(cutoff => blocks.filter(s =>
+      s.stat(timeCol).flatMap(_.max).exists(_ < cutoff)).map(_.id))
+    val left = blocks.map(_.id).filterNot(aged.contains)
+      .sortBy(id => Files.getLastModifiedTime(blocksP.resolve(id)).toMillis)
+    val overBudget = maxBytes.toSeq.flatMap { budget =>
+      val sizes = left.map(id => dirBytes(blocksP.resolve(id)))
+      // remaining bytes after deleting the k oldest, k = 0..n
+      val fits = sizes.scanLeft(sizes.sum)(_ - _).indexWhere(_ <= budget)
+      left.take(if (fits < 0) left.size - 1 else math.min(fits, left.size - 1))
     }
-    maxBytes.foreach { budget =>
-      def size(p: Path): Long = {
-        val s = Files.walk(p)
-        try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-        finally s.close()
-      }
-      // superseded-but-undeleted dirs (crashed digest) are dead weight,
-      // not live data — counting them would over-delete live blocks
-      val (supBlocks, _) = journalSuperseded()
-      var dirs = listDirs(blocksP)
-        .filterNot(d => supBlocks(d.getFileName.toString))
-        .sortBy(p => Files.getLastModifiedTime(p).toMillis)
-      var total = dirs.map(size).sum
-      while (total > budget && dirs.length > 1) {
-        total -= size(dirs.head)
-        out ::= dirs.head.toString
-        dirs = dirs.tail
-      }
-    }
-    out.distinct
+    aged ++ overBudget
   }
 
   /** Delete oldest blocks until the table fits `maxBytes`, or drop blocks
-    * whose newest `timeCol` value is older than `olderThan` (unix secs).
-    * Classification is pure sidecar arithmetic — no Spark jobs (a block
-    * with no recorded stats for `timeCol` falls back to one footer-level
-    * job, which only happens for pre-upgrade or crash-orphaned blocks). */
+    * whose newest `timeCol` value is older than `olderThan` (unix secs):
+    * exactly the blocks [[trimPlan]] lists. Pure sidecar arithmetic — no
+    * Spark jobs. */
   def trim(maxBytes: Option[Long] = None, olderThan: Option[Long] = None,
       timeCol: String = "time"): Seq[String] = {
     // under the digest lock: an unlocked trim could delete the partial
     // block a live digest is concurrently folding in (its Spark read
     // would fail mid-job), and a crashed digest's superseded dirs would
-    // inflate the byte budget. Recovery runs first so the maxBytes loop
-    // only ever sizes live dirs.
+    // inflate the byte budget. Recovery runs first so the plan only ever
+    // sizes live dirs.
     if (!grabDigestLock()) throw new IllegalStateException(
       s"table $root: a digest is in progress (digest.lock held); " +
         "trim would delete blocks it is reading")
-    try trimLocked(maxBytes, olderThan, timeCol)
-    finally releaseDigestLock()
-  }
-
-  private def trimLocked(maxBytes: Option[Long], olderThan: Option[Long],
-      timeCol: String): Seq[String] = {
-    recoverDigestJournal(haveLock = true)
-    var removed = List.empty[String]
-    val i = reconciled()
-    var segments = i.segments
-    olderThan.foreach { cutoff =>
-      for (s <- segments if s.kind == "block") {
-        val newest: Option[Long] = s.stat(timeCol).flatMap(_.max).orElse {
-          Try(spark.read.parquet(blocksP.resolve(s.id).toString)
-            .agg(max(col(timeCol))).collect()(0).getLong(0)).toOption
-        }
-        if (newest.exists(_ < cutoff)) {
-          deleteRecursively(blocksP.resolve(s.id))
-          removed ::= blocksP.resolve(s.id).toString
-          segments = segments.filterNot(x => x.kind == "block" && x.id == s.id)
-        }
+    try {
+      recoverDigestJournal(haveLock = true)
+      val i = reconciled()
+      val victims = trimVictims(i, maxBytes, olderThan, timeCol)
+      victims.foreach(id => deleteRecursively(blocksP.resolve(id)))
+      if (victims.nonEmpty) {
+        dropCachedPartials(victims)
+        writeInfo(derive(i.columns, i.segments.filterNot(s =>
+          s.kind == "block" && victims.contains(s.id))))
       }
-    }
-    maxBytes.foreach { budget =>
-      def size(p: Path): Long = {
-        val s = Files.walk(p)
-        try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-        finally s.close()
-      }
-      // oldest-first by modification time (block dirs are immutable after write)
-      var dirs = listDirs(blocksP).sortBy(p => Files.getLastModifiedTime(p).toMillis)
-      var total = dirs.map(size).sum
-      while (total > budget && dirs.length > 1) {
-        val victim = dirs.head
-        total -= size(victim)
-        deleteRecursively(victim)
-        removed ::= victim.toString
-        segments = segments.filterNot(x =>
-          x.kind == "block" && x.id == victim.getFileName.toString)
-        dirs = dirs.tail
-      }
-    }
-    if (removed.nonEmpty) {
-      dropCachedPartials(removed.map(p => Paths.get(p).getFileName.toString))
-      writeInfo(derive(i.columns, segments))
-    }
-    removed
+      victims.map(blocksP.resolve(_).toString)
+    } finally releaseDigestLock()
   }
 
   /** Gzipped TSV export of matching records (ExportBlockData,

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dsl.{AggOp, IntFilter, QFilter, SybilQuery}
-import graft.functions.BasicHist
 
 /** Outcome counters for one cached run. */
 case class CacheOutcome(hits: Int, misses: Int, uncacheable: Int, skipped: Int)
@@ -53,20 +52,30 @@ case class CacheOutcome(hits: Int, misses: Int, uncacheable: Int, skipped: Int)
   * The driver never loops jobs over blocks — the pattern that melts down
   * at 100 TB.
   *
+  * The cache holds no aggregation rule of its own; it owns the block
+  * classification, the cache key, the miss write/publish and the
+  * multi-path reads. Every rule is [[graft.dsl.SybilQuery]]'s, as in
+  * sybil, where the cache only stores each block's result of the one
+  * QuerySpec path: each partial is [[graft.dsl.SybilQuery.prepare]]
+  * (set-column check, str-replace, filters) grouped by
+  * [[graft.dsl.SybilQuery.keyCols]] over
+  * [[graft.dsl.SybilQuery.partialAggs]]; the partials fold through
+  * [[graft.dsl.SybilQuery.mergeAggs]] and end in
+  * [[graft.dsl.SybilQuery.finish]] (tdigest reshape, sort, limit), the
+  * same stage that ends an uncached run. Hist extents enter through
+  * [[graft.dsl.SybilQuery.withExtents]] from the sidecar
+  * ([[TableInfo.extents]]), as for `GraftTable.query`.
+  *
   * Supported ops ([[QueryCache.refusal]] is the gate): Count / Sum / Avg
-  * (sums are decimal partials, so the merge is exact), approx Distinct
+  * (decimal sum partials, so the merge is exact), approx Distinct
   * (per-block HLL sketches; union is register-wise max) and Hist — flat,
-  * log-scaled, nested AND the tdigest quantile flavor: the exact flavors
-  * persist their RAW mergeable buffer
-  * ([[graft.functions.HistBuf]]: bucket counts + moments + outlier
-  * side-arrays) with the flavor and bucket layout pinned by the sidecar
-  * extents and folded into the cache key, so the merged result is
-  * bit-identical to a single-pass hist and layout drift invalidates
-  * naturally; tdigest persists [[graft.functions.QBinsBuf]] (the
-  * deterministic extent-free quantile summary — a multiset homomorphism,
-  * so per-block merge is bit-identical to single-pass too). str-replace
-  * pre-transforms are applied inside each partial and folded into the
-  * cache key; sort/limit follow the DSL's ordering rules at merge time.
+  * log-scaled, nested and the tdigest quantile flavor. The exact hist
+  * flavors persist their raw mergeable buffer ([[graft.functions.HistBuf]])
+  * with the flavor and bucket layout (sidecar extents) folded into the
+  * cache key, so the merged result is bit-identical to a single-pass hist
+  * and layout drift invalidates naturally; tdigest persists the
+  * extent-free [[graft.functions.QBinsBuf]]. str-replace pre-transforms
+  * are folded into the cache key too.
   */
 class QueryCache(spark: SparkSession, table: GraftTable) {
 
@@ -78,8 +87,7 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     * entries also key on the bucket layout (extents + bucket count): a
     * table whose sidecar extents moved must not merge old-layout partials.
     */
-  private def queryKey(q: SybilQuery, dropped: Seq[QFilter],
-      extents: Map[String, (Long, Long)] = Map.empty): String = {
+  private def queryKey(q: SybilQuery, dropped: Seq[QFilter]): String = {
     val kept = q.filters.filterNot(dropped.contains)
     md5hex(Seq(
       "v=5", // partial-format version: bump on schema/convention changes
@@ -110,7 +118,8 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
           "t" + graft.functions.LogHist.DefaultTicksPerOctave
           else q.histBuckets.toString
         (if (q.useNestedHist) "nested" else if (q.useLogHist) "log" else "flat") +
-          ";" + layout + ";" + extents.toSeq.sorted.mkString(",")
+          ";" + layout + ";" + q.histExtents.filter { case (c, _) =>
+            q.aggCols.contains(c) }.toSeq.sorted.mkString(",")
       } else ""),
       "f=" + kept.map(_.toString).sorted.mkString("&")).mkString("|"))
   }
@@ -130,102 +139,30 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     case _ => Partial
   }
 
-  /** Partial aggregate under the query's groups/filters, optionally keyed
-    * by an extra (non-output) grouping column such as the block id. The
-    * DSL's str-replace pre-transform runs first so replaced columns filter
-    * and group identically to `q.run` (query_cache key parity). */
+  /** One block set's partial: the query's own [[SybilQuery.prepare]] over
+    * `filters`, then [[SybilQuery.partialAggs]] grouped by any extra
+    * (non-output) key such as the block id and the query's
+    * [[SybilQuery.keyCols]]. */
   private def partial(df: DataFrame, q: SybilQuery, filters: Seq[QFilter],
-      extents: Map[String, (Long, Long)], extraKeys: Seq[String] = Nil): DataFrame = {
-    val replaced = q.strReplace.foldLeft(df) { case (acc, (c, (pat, rep))) =>
-      acc.withColumn(c, regexp_replace(col(c), pat, rep))
-    }
-    val filtered =
-      if (filters.nonEmpty) replaced.filter(filters.map(_.toColumn).reduce(_ && _))
-      else replaced
-    val w = q.weightCol.map(col).getOrElse(lit(1L))
-    val keys = extraKeys.map(col) ++
-      q.groups.map(g => coalesce(col(g).cast("string"), lit("")).as(g))
-    def wsum(c: String) = q.weightCol match {
-      case Some(wc) => sum(col(c).cast(DecimalType(38, 6)) * col(wc))
-      case None     => sum(col(c).cast(DecimalType(38, 6)))
-    }
-    val aggs =
-      Seq(sum(w).cast(LongType).as("Count"), count(lit(1)).as("Samples")) ++
-        (q.op match {
-          case AggOp.HistOp if q.useTDigest => q.aggCols.flatMap { c =>
-            // the SybilQuery.run tdigest convention, kept in lockstep:
-            // populated judged on the CAST result, explicit flag instead
-            // of an in-band sentinel (every long is legal quantile data)
-            val cv = col(c).cast(LongType)
-            Seq(graft.functions.QuantileBins.qpctsPartial(
-                coalesce(cv, lit(0L)),
-                when(cv.isNotNull, lit(1L)).otherwise(lit(0L)))
-                .as(s"__qb_$c"),
-              count(cv).as(s"__tdn_$c"))
-          }
-          case AggOp.HistOp => q.aggCols.map { c =>
-            val (mn, mx) = extents(c)
-            // null-populated rows become the Long.MinValue sentinel
-            // (skipped by the aggregator; zero/negative weights stay real
-            // records), judged on the CAST result — the SybilQuery.run
-            // convention, kept in lockstep for cache parity
-            val cv = col(c).cast(LongType)
-            val v = coalesce(cv, lit(0L))
-            // sentinel-forgery guard in lockstep with SybilQuery.run: a
-            // data weight of Long.MinValue remaps to -1 (loud rejection)
-            val rawW = coalesce(w.cast(LongType), lit(0L))
-            val wv = when(cv.isNotNull,
-              when(rawW === lit(Long.MinValue), lit(-1L)).otherwise(rawW))
-              .otherwise(lit(Long.MinValue))
-            (if (q.useNestedHist)
-              graft.functions.NestedHist.nestedHistPartial(
-                v, wv, mn, mx, q.histBuckets)
-            else if (q.useLogHist)
-              graft.functions.LogHist.logHistPartial(v, wv, mn, mx)
-            else
-              BasicHist.histPartial(v, wv, mn, mx, q.histBuckets))
-              .as(s"__hist_$c")
-          }
-          case AggOp.DistinctOp(_) =>
-            val dcols = (if (q.distinctCols.nonEmpty) q.distinctCols
-                         else q.aggCols).map(col)
-            // any-null tuples excluded, matching SybilQuery.run's convention
-            Seq(hll_sketch_agg(
-              when(dcols.map(_.isNotNull).reduce(_ && _),
-                concat_ws("\u0001", dcols: _*))).as("__hll"))
-          case AggOp.AvgOp => q.aggCols.flatMap(c => Seq(
-            wsum(c).as(s"__sum_$c"),
-            // per-column populated weight: the avg denominator (the
-            // SybilQuery.run convention — null rows are not zeros)
-            sum(when(col(c).isNotNull, w).otherwise(lit(0L)))
-              .as(s"__wn_$c")))
-          case _ => q.aggCols.map(c => wsum(c).as(s"__sum_$c"))
-        })
-    if (keys.nonEmpty) filtered.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-    else filtered.agg(aggs.head, aggs.tail: _*)
+      extraKeys: Seq[String] = Nil): DataFrame = {
+    val aggs = q.partialAggs
+    q.prepare(df, filters).groupBy(extraKeys.map(col) ++ q.keyCols: _*)
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** Run `q` against the table with per-block partial caching. Supports
     * the shapes [[QueryCache.refusal]] admits (others: `table.query(q)`).
     */
-  def run(q: SybilQuery): (DataFrame, CacheOutcome) = {
+  def run(query: SybilQuery): (DataFrame, CacheOutcome) = {
     // ONE sidecar snapshot per run: block stats, the top-up block and
     // every schema below come from it, never from a parquet footer job
     val snap = table.reconciled()
-    QueryCache.refusal(q, snap.columns).foreach(why =>
+    QueryCache.refusal(query, snap.columns).foreach(why =>
       throw new IllegalArgumentException(why))
-    // loghist caches its OWN partial flavor (LogHistPartialAggregator) and
-    // the flavor is part of the cache key, so flat and log partials for the
-    // same filters can never merge into each other
     // hist partials need a SHARED bucket layout across blocks and runs:
     // extents come from the sidecar (the stored-IntInfo path) and key the
     // cache, so layout drift invalidates naturally
-    val extents: Map[String, (Long, Long)] =
-      if (q.op != AggOp.HistOp || q.useTDigest) Map.empty
-      else snap.columns.collect {
-        case ColumnInfo(n, _, Some(mn), Some(mx)) if q.aggCols.contains(n) =>
-          n -> (mn, mx)
-      }.toMap
+    val q = query.withExtents(snap.extents)
 
     val (timeFilters, rest) = q.filters.partition {
       case IntFilter(n, _, _) => n == q.timeCol
@@ -233,7 +170,7 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     }
     // a cacheable block drops ALL time filters, so every cacheable block
     // shares one key
-    val key = queryKey(q, timeFilters, extents)
+    val key = queryKey(q, timeFilters)
 
     // zero-job classification: block time extents come from segment stats
     // recorded at digest. The top-up block is never cached: the next
@@ -281,7 +218,7 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
       // a path containing "blocks" must not take the root's segment)
       val withBlock = blocks(missIds).withColumn("__block",
         substring_index(substring_index(input_file_name(), "/blocks/", -1), "/", 1))
-      val p = partial(withBlock, q, rest, extents, extraKeys = Seq("__block"))
+      val p = partial(withBlock, q, rest, extraKeys = Seq("__block"))
       val tmp = table.cacheRoot.resolve(key).resolve(s".tmp-${java.util.UUID.randomUUID()}")
       p.write.partitionBy("__block").mode(SaveMode.Overwrite).parquet(tmp.toString)
       val written = {
@@ -322,14 +259,14 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
       .filter(Files.exists(_))
     val cachedPartials: Option[DataFrame] =
       if (cached.isEmpty) None
-      else Some(spark.read.schema(partial(noRows, q, rest, extents).schema)
+      else Some(spark.read.schema(partial(noRows, q, rest).schema)
         .parquet(cached.map(_.toString): _*))
 
     // partially-covered blocks and the top-up block: one scan with the
     // FULL filter set
     val uncachedPartials: Option[DataFrame] =
       if (uncacheableIds.isEmpty) None
-      else Some(partial(blocks(uncacheableIds), q, q.filters, extents))
+      else Some(partial(blocks(uncacheableIds), q, q.filters))
 
     // all-blocks-skipped still takes the normal merge path over an EMPTY
     // partial frame, so the zero-row result carries the MERGED output
@@ -339,76 +276,23 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     val parts0 = Seq(cachedPartials, uncachedPartials).flatten
     val parts =
       if (parts0.nonEmpty) parts0
-      else Seq(partial(noRows, q, q.filters, extents))
-    val out = {
-      val merged = parts.reduce((a, b) => a.unionByName(b, allowMissingColumns = false))
-      val keys = q.groups.map(col)
-      val sums =
-        Seq(sum(col("Count")).cast(LongType).as("Count"),
-          sum(col("Samples")).cast(LongType).as("Samples")) ++
-          (q.op match {
-            case AggOp.SumOp => q.aggCols.map(c =>
-              sum(col(s"__sum_$c")).cast(DoubleType).as(s"${c}_sum"))
-            case AggOp.AvgOp => q.aggCols.map(c =>
-              (sum(col(s"__sum_$c")).cast(DoubleType) /
-                sum(col(s"__wn_$c"))).as(s"${c}_avg"))
-            case AggOp.HistOp if q.useTDigest => q.aggCols.flatMap(c => Seq(
-              graft.functions.QuantileBins.qpctsMerge(col(s"__qb_$c"))
-                .as(s"__pcts_$c"),
-              sum(col(s"__tdn_$c")).cast(LongType).as(s"__n_$c")))
-            case AggOp.HistOp => q.aggCols.map { c =>
-              val (mn, mx) = extents(c)
-              (if (q.useNestedHist)
-                graft.functions.NestedHist.nestedHistMerge(
-                  col(s"__hist_$c"), mn, mx, q.histBuckets)
-              else if (q.useLogHist)
-                graft.functions.LogHist.logHistMerge(col(s"__hist_$c"), mn, mx)
-              else
-                BasicHist.histMerge(col(s"__hist_$c"), mn, mx, q.histBuckets))
-                .as(s"${c}_hist")
-            }
-            case AggOp.DistinctOp(_) =>
-              // union = register-wise max -> merged estimate identical to
-              // the single-pass sketch over the same rows
-              Seq(hll_sketch_estimate(hll_union_agg(col("__hll")))
-                .as("Distinct"))
-            case _ => Nil
-          })
-      val g0 = if (keys.nonEmpty) merged.groupBy(keys: _*).agg(sums.head, sums.tail: _*)
-               else merged.agg(sums.head, sums.tail: _*)
-      // tdigest: reshape merged quantiles into the hist output surface —
-      // the SAME helper the uncached run uses (SybilQuery.tdigestHistStruct),
-      // so the cached struct can never drift from the single-pass one
-      val g =
-        if (q.op == AggOp.HistOp && q.useTDigest)
-          q.aggCols.foldLeft(g0)((d, c) => d
-            .withColumn(s"${c}_hist", SybilQuery.tdigestHistStruct(
-              col(s"__pcts_$c"), col(s"__n_$c")))
-            .drop(s"__pcts_$c", s"__n_$c"))
-        else g0
-      // same ordering rules as SybilQuery.run: $COUNT desc default, -sort /
-      // -sort-asc honored, group keys break ties
-      val sortCol = q.sortBy match {
-        case None | Some("$COUNT") => col("Count")
-        case Some(c) =>
-          if (g.columns.contains(s"${c}_avg")) col(s"${c}_avg")
-          else if (g.columns.contains(s"${c}_sum")) col(s"${c}_sum")
-          else col(c)
-      }
-      val ordered = g.orderBy(
-        (if (q.sortAsc) sortCol.asc else sortCol.desc) +: q.groups.map(col(_).asc): _*)
-      q.limit.map(ordered.limit).getOrElse(ordered)
-    }
+      else Seq(partial(noRows, q, q.filters))
+    val aggs = q.mergeAggs
+    val out = q.finish(parts.reduce(_.unionByName(_, allowMissingColumns = false))
+      .groupBy(q.groups.map(col): _*).agg(aggs.head, aggs.tail: _*))
     (out, CacheOutcome(hitPaths.size, missIds.size, uncacheableIds.size, skipped))
   }
 }
 
 object QueryCache {
   /** THE cacheability gate: why `q` cannot run through the cache on a
-    * table with column registry `columns`, or None when it can.
-    * [[QueryCache.run]] throws it; Cli falls back to the uncached run on
-    * it. Reads only the registry (no Spark job). */
-  def refusal(q: SybilQuery, columns: Seq[ColumnInfo]): Option[String] = {
+    * table with column registry `columns`, or None when it can. `readLog`
+    * asks for the undigested ingest log too, which the cache, reading
+    * digested blocks only, would silently drop. [[QueryCache.run]] throws
+    * it; Cli falls back to the uncached run on it. Reads only the registry
+    * (no Spark job). */
+  def refusal(q: SybilQuery, columns: Seq[ColumnInfo],
+      readLog: Boolean = false): Option[String] = {
     val weightType = q.weightCol.map(wc =>
       columns.find(_.name == wc).map(c => DataType.fromDDL(c.dtype)))
     // an absent column passes: the run fails on its own terms
@@ -419,7 +303,9 @@ object QueryCache {
     val noExtents = if (q.op != AggOp.HistOp || q.useTDigest) None
       else q.aggCols.find(c => !columns.exists(ci =>
         ci.name == c && ci.min.nonEmpty && ci.max.nonEmpty))
-    if (q.samples || q.timeBucket.nonEmpty)
+    if (readLog)
+      Some("the cache reads digested blocks only; -read-log runs uncached")
+    else if (q.samples || q.timeBucket.nonEmpty)
       Some("cache supports plain aggregations")
     // distinct-limit returns scan-order-dependent key tuples, not a
     // mergeable partial — caching per-block HLL partials for it would

@@ -172,6 +172,33 @@ class AsOfCacheSpec extends SparkSpec {
     }.sortBy(_._1)
     assert(canon(r2.collect()) === canon(direct.collect()))
     assert(canon(cached1) === canon(r2.collect()))
+    // -sort on the aggregated column orders by the hist mean, in both
+    // directions, cached as uncached (the row order itself is compared)
+    for (sorted <- Seq(q.sort("v"), q.sort("v").ascending)) {
+      val (rs, os) = cache.run(sorted)
+      assert(os === graft.sources.CacheOutcome(hits = 1, misses = 0, uncacheable = 1, skipped = 0))
+      def inOrder(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(r =>
+        (r.getString(0), r.getStruct(r.fieldIndex("v_hist")).getAs[Double]("mean")))
+      val want = inOrder(sorted.withExtents(extents).run(t.read()).collect())
+      assert(want.map(_._2) === (if (sorted.sortAsc) want.map(_._2).sorted
+        else want.map(_._2).sorted.reverse))
+      assert(inOrder(rs.collect()) === want)
+    }
+  }
+
+  test("query cache: a group-by on a set column throws the uncached run's error") {
+    val root = SparkSpec.tempDir("graft-qc-setgroup").toString
+    val t = new GraftTable(spark, root)
+    for (b <- 0 until 2) {
+      t.ingest((0 until 40).map(i => (Seq(s"g${i % 3}"), (b * 40 + i).toLong))
+        .toDF("tags", "time"))
+      t.digest(compact = false)
+    }
+    val q = SybilQuery().groupBy("tags")
+    val uncached = intercept[IllegalArgumentException](t.query(q))
+    assert(uncached.getMessage.contains("cannot group by set column 'tags'"))
+    val cached = intercept[IllegalArgumentException](new QueryCache(spark, t).run(q))
+    assert(cached.getMessage === uncached.getMessage)
   }
 
   test("query cache: weighted avg partials merge exactly") {

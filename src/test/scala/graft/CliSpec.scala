@@ -173,6 +173,25 @@ class CliSpec extends SparkSpec {
     assert(run("-cache-queries") === uncached, "cached hit run")
   }
 
+  test("CLI -read-log -cache-queries counts the undigested log like the uncached run") {
+    import spark.implicits._
+    val db = SparkSpec.tempDir("graft-cli-readlog").toString
+    val t = new graft.sources.GraftTable(spark, s"$db/events")
+    def rows(from: Int, n: Int) = (from until from + n).map(i =>
+      (s"h${i % 2}", (1700000000 + i).toLong)).toDF("host", "time")
+    t.ingest(rows(0, 50)); t.digest()
+    t.ingest(rows(50, 30)) // stays in the ingest log
+    def run(extra: String*) = captureOut {
+      Cli.main(Array("query", "-dir", db, "-table", "events",
+        "-group", "host", "-read-log", "-json") ++ extra)
+    }
+    val uncached = run()
+    val counts = mapper.readTree(uncached).get("results").elements().asScala
+      .map(_.get("Count").asLong).toSeq
+    assert(counts.sum === 80)
+    assert(run("-cache-queries") === uncached)
+  }
+
   test("CLI inspect dumps sidecar stats for a table and schema for raw parquet") {
     val db = SparkSpec.tempDir("graft-cli-inspect").toString
     val data = SparkSpec.tempDir("graft-cli-inspect-data")

@@ -240,6 +240,36 @@ class IngestSpec extends SparkSpec {
     assert(t.blockIds.isEmpty && partialDirs(b1).isEmpty)
   }
 
+  test("trim deletes exactly the blocks its dry run lists") {
+    import spark.implicits._
+    val root = tmpDir("graft-trim-plan")
+    val t = new GraftTable(spark, root)
+    // three blocks; the last written (newest by mtime) is the oldest by time
+    val ids = Seq(1000L, 2000L, 100L).map { t0 =>
+      val before = t.blockIds.toSet
+      t.ingest((0 until 100).map(i => (s"k${i % 4}", t0 + i)).toDF("k", "time"))
+      t.digest(compact = false)
+      (t.blockIds.toSet -- before).head
+    }
+    val dirs = ids.map(id => java.nio.file.Paths.get(root, "blocks", id))
+    dirs.zipWithIndex.foreach { case (d, k) =>
+      Files.setLastModifiedTime(d, java.nio.file.attribute.FileTime.fromMillis(
+        1700000000000L + k * 60000L))
+    }
+    def bytes(d: java.nio.file.Path): Long = {
+      val s = Files.walk(d)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+      finally s.close()
+    }
+    // the aged block goes; the two left fit the budget
+    val budget = Some(bytes(dirs(0)) + bytes(dirs(1)))
+    val plan = t.trimPlan(maxBytes = budget, olderThan = Some(500L))
+    val removed = t.trim(maxBytes = budget, olderThan = Some(500L))
+    assert(plan === removed)
+    assert(removed === Seq(dirs(2).toString))
+    assert(t.blockIds.toSet === ids.take(2).toSet)
+  }
+
   test("query cache serves loghist exactly, with a key distinct from flat hist") {
     import spark.implicits._
     val root = tmpDir("graft-loghist-cache")
