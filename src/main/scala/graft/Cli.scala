@@ -244,9 +244,10 @@ object Cli {
           i.segments.foreach(s => println(
             s"  segment ${s.kind}/${s.id} rows=${s.rows}"))
         } else {
-          val df = spark.read.parquet(target)
-          println(s"parquet $target  rows=${df.count()}")
-          println(df.schema.treeString)
+          // footers read on the driver, like the reference: no Spark job
+          val ft = GraftTable.footers(spark, Seq(Paths.get(target)))
+          println(s"parquet $target  rows=${ft.rows}")
+          println(ft.schema.treeString)
         }
 
       case "query" if f.contains("tables") =>

@@ -53,14 +53,16 @@ case class TableInfo(rowCount: Long, columns: Seq[ColumnInfo],
   * }}}
   *
   *  - `ingest()` appends a parquet directory per call — atomic at the
-  *    directory level — then merges ONLY the batch's stats into the sidecar
-  *    (one small job over the new data). Cost is O(batch), like the
-  *    reference's log append (row_store.go:197-259); it never rescans the
-  *    table (that is the explicit `rebuild` command).
+  *    directory level — then merges ONLY the batch's stats into the sidecar.
+  *    The stats ride the write itself (one job), and the new files'
+  *    footers, read on the driver, verify its row count. Cost is O(batch),
+  *    like the reference's log append (row_store.go:197-259); it never
+  *    rescans the table (that is the explicit `rebuild` command).
   *  - `digest()` drains the log into block dirs with 64Ki-row row groups
   *    (CHUNK_SIZE, table.go:44), topping up the newest partial block first
   *    (FillPartialBlock, table_block_io.go:48-107) so repeated small
-  *    ingest+digest cycles keep a bounded block count.
+  *    ingest+digest cycles keep a bounded block count. Its read schema
+  *    comes from its inputs' footers, so the write is its one job.
   *  - `read()` is ONE multi-path parquet relation over all segment dirs
   *    (mergeSchema for column evolution) — plan size is O(1), not
   *    O(blocks).
@@ -200,13 +202,15 @@ class GraftTable(spark: SparkSession, root: String) {
 
   /** One Spark job over a freshly-written segment dir: row count + per-long
     * column (min, max, cnt, sum, sumsq). min/max/count come from parquet
-    * footers (aggregate pushdown); sum/sumsq scan only the long columns.
+    * footers (aggregate pushdown); sum/sumsq scan only the long columns;
+    * the schema comes from the footers on the driver (no inference job).
     * Since r13 this is the FALLBACK/recovery path — the write paths
     * compute the same aggregates in-flight via `observe()` (zero extra
     * scan); this rescan covers crash-orphaned dirs ([[reconciled]]) and
     * any observe cross-check mismatch. */
   private def segmentStats(dir: Path, kind: String): SegmentInfo = {
-    val df = spark.read.parquet(dir.toString)
+    val df = spark.read.schema(GraftTable.footers(spark, Seq(dir)).schema)
+      .parquet(dir.toString)
     val longCols = longColsOf(df.schema)
     val aggs = statAggs(longCols)
     val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
@@ -219,7 +223,8 @@ class GraftTable(spark: SparkSession, root: String) {
     * read of every byte written). `expectedRows`: when the caller already
     * knows the exact row count (digest knows it from the sidecar), the
     * observed count is cross-checked against it for free; otherwise
-    * (`None`) a footer-only count job (no column decode) verifies it.
+    * (`None`) the row-group counts in the written files' footers, read on
+    * the driver with no Spark job, verify it.
     * On ANY mismatch — e.g. a speculative/retried stage double-counting
     * into the observation — falls back LOUDLY to the rescan, because
     * these numbers feed zone maps and extent arbitration, where a wrong
@@ -234,8 +239,7 @@ class GraftTable(spark: SparkSession, root: String) {
     val m = obs.get
     val rows = m("__rows").asInstanceOf[Long]
     val verified = expectedRows.getOrElse(
-      withJobDesc(s"graft.$kind.verify")(
-        spark.read.parquet(outDir.toString).count()))
+      GraftTable.footers(spark, Seq(outDir)).rows)
     if (verified != rows) {
       System.err.println(s"[graft] observe mismatch on $outDir: observed " +
         s"$rows rows, verified $verified — rescanning (stats stay exact)")
@@ -496,14 +500,14 @@ class GraftTable(spark: SparkSession, root: String) {
       freshBlockIds.map(id => segmentStats(blocksP.resolve(id), "block"))
     // crash-orphaned segments (dir renamed, writeInfo never ran) may
     // carry columns the registry never saw: extend it from their parquet
-    // schemas (driver-side footer reads), or first-type-wins enforcement
+    // footers (read on the driver, no job), or first-type-wins enforcement
     // and extent tracking would silently skip those columns — a later
     // conflicting ingest would then pass checkSchema and break the
     // merged read
     val registry = (freshLogIds.map(ingestP.resolve) ++
         freshBlockIds.map(blocksP.resolve))
       .foldLeft(i.columns)((reg, dir) =>
-        updatedRegistry(reg, spark.read.parquet(dir.toString).schema))
+        updatedRegistry(reg, GraftTable.footers(spark, Seq(dir)).schema))
     val next = derive(registry, kept ++ fresh)
     if (next != i) writeInfo(next)
     next
@@ -686,8 +690,8 @@ class GraftTable(spark: SparkSession, root: String) {
     // stats ride the write itself (observe): the log append costs ONE
     // pass over the batch, not write + rescan — the reference's row-store
     // append computes its IntInfo while writing too (row_store.go). The
-    // footer-count cross-check inside observedStats keeps the sidecar
-    // exact even if an observation ever double-counted.
+    // driver-side footer-count cross-check inside observedStats keeps the
+    // sidecar exact even if an observation ever double-counted.
     val seg0 = observedStats(clean, tmp, "log", expectedRows = None) { d =>
       withJobDesc("graft.ingest.write") {
         d.write.mode(SaveMode.ErrorIfExists).parquet(tmp.toString)
@@ -792,9 +796,12 @@ class GraftTable(spark: SparkSession, root: String) {
 
     val segRows = i.segments.filter(s =>
       s.kind == "log" || consumedIds(s.id)).map(_.rows).sum
-    // spark.read itself spawns the mergeSchema footer job — tag it apart
-    // from the write so file-count-bound work is visible separately
-    val df = withJobDesc("graft.digest.schema")(readDirs(logs ++ consumedBlocks))
+    // the read schema is the inputs' footer schemas merged on the driver
+    // (no schema-inference job), so the write is the digest's one job; a
+    // column only some inputs carry reads as null in the others
+    val inputs = logs ++ consumedBlocks
+    val df = spark.read.schema(GraftTable.footers(spark, inputs).schema)
+      .parquet(inputs.map(_.toString): _*)
     val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     // the Spark write is the long pole: refresh the lock before and
     // after so a > staleMs compaction isn't broken as "crashed"
@@ -819,7 +826,7 @@ class GraftTable(spark: SparkSession, root: String) {
     val prevOpen = spark.conf.getOption(openConf)
     val seg0 =
       try {
-        val bytes = (logs ++ consumedBlocks).map(dirBytes).sum
+        val bytes = inputs.map(dirBytes).sum
         val par = math.max(1, spark.sparkContext.defaultParallelism)
         val split = math.min(128L << 20,
           math.max(4L << 20, bytes / (2L * par)))
@@ -1087,6 +1094,57 @@ class GraftTable(spark: SparkSession, root: String) {
 }
 
 object GraftTable {
+  /** What the Parquet footers of a set of segment dirs say: their Spark
+    * schema, merged by name in first-seen order, and their row count. */
+  case class Footers(schema: StructType, rows: Long)
+
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Read the footers of every data file under `paths` (segment dirs, or
+    * single files) on the driver — no Spark job. A dir's data files are
+    * its regular files whose names start with neither `_` nor `.`, as
+    * Spark lists them (so `_SUCCESS` and `.crc` files are skipped). The
+    * schema is the one Spark wrote into the footer, or, for files Spark
+    * did not write, the converted Parquet schema. A vanished path or a dir
+    * with no data files throws FileNotFoundException, which
+    * [[retryStaleListing]] treats as a stale listing. Cost is one footer
+    * read per file: fine for a digest's inputs, not for a whole table. */
+  def footers(spark: SparkSession, paths: Seq[Path]): Footers = {
+    val files = paths.flatMap(dataFiles)
+    if (files.isEmpty) throw new java.io.FileNotFoundException(
+      s"no parquet data files under ${paths.mkString(", ")}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    lazy val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    files.foldLeft(Footers(new StructType(), 0L)) { (acc, f) =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), conf)
+      val footer = scala.util.Using.resource(
+        org.apache.parquet.hadoop.ParquetFileReader.open(in))(_.getFooter)
+      val meta = footer.getFileMetaData
+      val schema = Option(meta.getKeyValueMetaData.get(SparkRowMetadataKey))
+        .flatMap(json => Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
+        .getOrElse(converter.convert(meta.getSchema))
+      val known = acc.schema.fieldNames.toSet
+      Footers(StructType(acc.schema.fields ++ schema.fields.filterNot(c => known(c.name))),
+        acc.rows + footer.getBlocks.asScala.map(_.getRowCount).sum)
+    }
+  }
+
+  private def dataFiles(p: Path): Seq[Path] =
+    if (Files.isRegularFile(p)) Seq(p)
+    else try {
+      val s = Files.list(p)
+      try s.iterator().asScala.filter { f =>
+        val name = f.getFileName.toString
+        Files.isRegularFile(f) && !name.startsWith("_") && !name.startsWith(".")
+      }.toSeq.sorted
+      finally s.close()
+    } catch {
+      case e: java.nio.file.NoSuchFileException =>
+        throw new java.io.FileNotFoundException(e.getMessage)
+    }
+
   /** Retry `f` when its failure traces to a stale plan-time file listing
     * (a concurrent digest/optimize/trim consumed dirs between listing
     * and execution — Spark surfaces it as FileNotFoundException or the

@@ -400,7 +400,8 @@ class AsOfCacheSpec extends SparkSpec {
     // schema inferred from whichever block's footer comes first (which
     // failed with UNRESOLVED_COLUMN depending on the random block ids).
     for (n <- 0 until 5) {
-      val t = new GraftTable(spark, SparkSpec.tempDir(s"graft-qc-cols-$n").toString)
+      val root = SparkSpec.tempDir(s"graft-qc-cols-$n").toString
+      val t = new GraftTable(spark, root)
       for (b <- 0 until 4) {
         val rows = (0 until 60).map(i => (s"k${i % 2}", (b * 100 + i).toLong,
           (i % 9).toLong, s"r${(i + b) % 3}"))
@@ -421,6 +422,24 @@ class AsOfCacheSpec extends SparkSpec {
       val (r2, o2) = cache.run(q)
       assert(o2.hits === 3)
       assert(canon(r2) === uncached, s"table $n: cached hit run")
+      // a batch adds a column, and the compacting digest folds it into
+      // the top-up block, whose older rows read it as null
+      val top = t.topUpBlock(t.info()).get.id
+      t.ingest((0 until 40).map(i => (s"k${i % 2}", (400 + i).toLong,
+        (i % 9).toLong, s"t${i % 2}")).toDF("k", "time", "v", "tier"))
+      t.digest()
+      assert(t.blockIds.size === 4 && !t.blockIds.contains(top), s"table $n: top-up refolded")
+      val tq = SybilQuery().groupBy("tier").aggregate("v")
+        .withOp(AggOp.AvgOp).intFilterGt("time", -1).limitTo(10)
+      val tierUncached = canon(t.query(tq))
+      assert(t.query(tq).collect().map(r => r.getString(0) -> r.getAs[Long]("Count")).toMap ===
+        Map("" -> 240L, "t0" -> 20L, "t1" -> 20L))
+      val (r3, o3) = cache.run(tq)
+      assert(o3 === graft.sources.CacheOutcome(hits = 0, misses = 3, uncacheable = 1, skipped = 0))
+      assert(canon(r3) === tierUncached, s"table $n: cached run over the new column")
+      val folded = spark.read.parquet(
+        java.nio.file.Paths.get(root, "blocks", t.topUpBlock(t.info()).get.id).toString)
+      assert(folded.count() === 100 && folded.filter(col("tier").isNull).count() === 60)
     }
   }
 }

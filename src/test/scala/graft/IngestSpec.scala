@@ -545,8 +545,9 @@ class IngestSpec extends SparkSpec {
     val t = new GraftTable(spark, root)
     t.ingest((0 until 100).map(i => (i.toLong, i % 5)).toDF("id", "k"))
     // simulate a concurrent ingest whose sidecar update lost the race:
-    // a log dir exists on disk that info.json has never seen
-    (100 until 150).map(i => (i.toLong, i % 5)).toDF("id", "k")
+    // a log dir exists on disk that info.json has never seen, carrying a
+    // column the registry has never seen either
+    (100 until 150).map(i => (i.toLong, i % 5, s"x$i")).toDF("id", "k", "extra")
       .write.parquet(s"$root/ingest/${java.util.UUID.randomUUID()}")
     assert(t.info().rowCount === 100) // sidecar stale
     t.digest() // digest reconciles first
@@ -554,6 +555,54 @@ class IngestSpec extends SparkSpec {
     assert(t.read().count() === 150)
     val id = t.info().columns.find(_.name == "id").get
     assert(id.max.contains(149L))
+    // the orphan's column reaches the registry and the digested block,
+    // where the older rows read it as null
+    assert(t.info().columns.find(_.name == "extra").map(_.dtype) === Some("string"))
+    val block = spark.read.parquet(
+      java.nio.file.Paths.get(root, "blocks", t.blockIds.head).toString)
+    assert(block.filter(col("extra").isNull).select("id").as[Long].collect().sorted.toSeq ===
+      (0L until 100L))
+    assert(block.filter(col("extra") === concat(lit("x"), col("id").cast("string"))).count() === 50)
+  }
+
+  test("job budget: an ingest is its write, a JSON batch adds its " +
+      "inference, a compacting digest is its write") {
+    import spark.implicits._
+    val root = tmpDir("graft-jobs")
+    val t = new GraftTable(spark, root)
+    def jobsOf(f: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try { f; Thread.sleep(500) } // listener bus drain
+      finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get
+    }
+    // a three-file log dir, beside _SUCCESS and .crc files: the row count
+    // the footers verify must be the batch's, not a file count. Three
+    // partitions without a shuffle: under AQE a repartition's map stage
+    // is a job of its own, the batch's cost rather than the ingest's
+    val batch = spark.sparkContext.parallelize(
+      (0 until 300).map(i => (1700000000L + i, s"u${i % 7}")), 3).toDF("time", "user")
+    assert(jobsOf(t.ingest(batch)) === 1)
+    assert(t.info().segments.map(_.rows) === Seq(300L))
+    val logFiles = Files.list(java.nio.file.Paths.get(root, "ingest"))
+      .iterator().asScala.toSeq.flatMap(d => Files.list(d).iterator().asScala.toSeq)
+      .map(_.getFileName.toString)
+    assert(logFiles.count(_.endsWith(".parquet")) === 3 && logFiles.contains("_SUCCESS") &&
+      logFiles.exists(_.endsWith(".crc")), logFiles.mkString(", "))
+    t.digest()
+    val path = writeJsonl((0 until 50).map(i =>
+      s"""{"time": ${1700000300 + i}, "user": "u${i % 7}"}"""))
+    assert(jobsOf(t.ingest(Ingest.readJson(spark, path))) === 2)
+    // folds the log into the 300-row top-up block
+    assert(jobsOf(t.digest()) === 1)
+    assert(t.blockIds.size === 1 && t.info().rowCount === 350)
+    assert(t.read().count() === 350)
   }
 
   test("ingest of a batch whose every column conflicts is a warned no-op") {
