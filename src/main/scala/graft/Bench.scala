@@ -13,12 +13,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per query, CONVERGED untimed warm-up (up to 3 runs, stopping once a
   * run is no longer >25% faster than its predecessor — so the timed
   * window always sits past the JIT decay knee), then `reps` (default
-  * 3) timed runs with a GC + listener settle between; the reported
-  * per-query second is the MEDIAN of those reps, the total their sum.
-  * Why: profiling (tools/BenchOne listener breakdown) shows a query's
-  * first execution in a JVM spends 3-10x its steady-state cost in
-  * executor-side warm-up, and — the r14/r15 finding — the decay curve
-  * EXTENDS THROUGH ~5 EXECUTIONS for codegen-heavy queries (q186:
+  * 3) timed runs with a GC between, each measured by [[graft.core.Meter]];
+  * the reported per-query second is the MEDIAN of those reps, the total
+  * their sum. Why: profiling (the per-rep split of [[graft.tools.Profile]])
+  * shows a query's first execution in a JVM spends 3-10x its
+  * steady-state cost in executor-side warm-up, and — the r14/r15
+  * finding — the decay curve EXTENDS THROUGH ~5 EXECUTIONS for
+  * codegen-heavy queries (q186:
   * 4.56 → 1.92 → 1.90 → 1.86 → 1.37 s across executions on an idle box).
   * The r12–r14 scheme timed execution #2 exactly once, which sat
   * systematically higher on that curve than the variance pass's
@@ -53,8 +54,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loudly marks its artifact `"filtered":true`.
   */
 object Bench {
-  private def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** Session warm-up before any query is measured: load every table once
+    * and materialize q01, so no query pays first-scan or first-codegen
+    * cost. Failures are left to the measured runs to report. */
+  private[graft] def warmSession(spark: SparkSession, sfDir: String): Unit = {
+    for (t <- graft.core.Tables.all)
+      try graft.core.Tables.load(spark, sfDir, t).count()
+      catch { case _: Throwable => }
+    try materialize(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
+    catch { case _: Throwable => }
+  }
+
+  /** CONVERGED warm-up (up to 3 untimed runs): stop once a run is no
+    * longer >25% faster than its predecessor. One fixed warm-up put the
+    * timed reps on the JIT decay curve's KNEE for codegen-heavy queries
+    * (q186 executions: 4.87, 2.15, 1.98, 1.29, then flat ~1.3 — the knee
+    * at execution 3-4 is exactly the [1.38, 3.38] rep window the r15
+    * anchors recorded); steady queries converge after the second run, so
+    * the common cost is one extra materialization. */
+  private[graft] def warmUp(run: => Unit): Unit = {
+    var wPrev = Double.MaxValue
+    var warmups = 0
+    var converged = false
+    while (warmups < 3 && !converged) {
+      val t0 = System.nanoTime()
+      run
+      val w = (System.nanoTime() - t0) / 1e9
+      converged = w >= wPrev * 0.75
+      wPrev = w
+      warmups += 1
+    }
+  }
 
   /** Anchor-hygiene preflight (the r13 anchor-A lesson made mechanical):
     * 1115 stale `/tmp/graft-*` dirs (~16 GB) from accumulated test runs
@@ -124,12 +157,7 @@ object Bench {
         .config("spark.sql.shuffle.partitions", cpus)
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    for (t <- graft.core.Tables.all)
-      try graft.core.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => }
-    try materialize(SparkEntry.queries("q01_pricing_summary")(spark, sfDir))
-    catch { case _: Throwable => }
+    warmSession(spark, sfDir)
 
     // measurement isolation: collect the PREVIOUS queries' garbage before
     // each timed rep, or a heavy predecessor's heap debt lands in an
@@ -140,8 +168,6 @@ object Bench {
     // spill accounting per query (max across timed reps): the
     // constrained-heap validation (SCALE.md) needs to SEE which queries
     // spilled, not assume it
-    val meter = new graft.core.SpillMeter
-    spark.sparkContext.addSparkListener(meter)
     var spills = Map.empty[String, (Long, Long)]
     var failed = List.empty[String]
 
@@ -192,26 +218,8 @@ object Bench {
       // keep the JVM-global pin registry in step with the cache wipe —
       // a stale registry key makes a later query run silently unpinned
       graft.core.Stats.PlanCache.reset()
-      // CONVERGED warm-up (up to 3 untimed runs): stop once a run is no
-      // longer >25% faster than its predecessor. One fixed warm-up put
-      // the timed reps on the JIT decay curve's KNEE for codegen-heavy
-      // queries (q186 executions: 4.87, 2.15, 1.98, 1.29, then flat ~1.3
-      // — the knee at execution 3-4 is exactly the [1.38, 3.38] rep
-      // window the r15 anchors recorded); steady queries converge after
-      // the second run, so the common cost is one extra materialization.
-      try {
-        var wPrev = Double.MaxValue
-        var warmups = 0
-        var converged = false
-        while (warmups < 3 && !converged) {
-          val t0 = System.nanoTime()
-          materialize(fn(spark, sfDir))
-          val w = (System.nanoTime() - t0) / 1e9
-          converged = w >= wPrev * 0.75
-          wPrev = w
-          warmups += 1
-        }
-      } catch { case e: Throwable =>
+      try warmUp(materialize(fn(spark, sfDir)))
+      catch { case e: Throwable =>
         ok = false
         failed ::= name
         System.err.println(s"[bench] $name FAILED (warm-up): ${e.getMessage}")
@@ -221,23 +229,18 @@ object Bench {
         val n = if ((System.nanoTime() - benchStart) / 1e9 > repBudgetSec) {
           repsDegraded += 1; 1
         } else repsPerQuery
-        // counters are cumulative; per-rep wall/cpu/spill are snapshot
-        // DIFFS (never reset — a reset mid-suite would corrupt another
-        // rep's bookend if the listener queue drains late)
-        var prev = { meter.settle(10L); meter.snapshot() }
         var spillMax = (0L, 0L)
         val reps = (1 to n).map { _ =>
           if (gcBetween) System.gc()
-          val t0 = System.nanoTime()
-          materialize(fn(spark, sfDir))
-          val w = (System.nanoTime() - t0) / 1e9
-          meter.settle(10L)
-          val cur = meter.snapshot()
-          spillMax = (math.max(cur._1 - prev._1, spillMax._1),
-            math.max(cur._2 - prev._2, spillMax._2))
-          val cpu = (cur._4 - prev._4) / 1e3
-          prev = cur
-          (w, cpu)
+          val (w, m) = graft.core.Meter.measure(spark) {
+            val t0 = System.nanoTime()
+            materialize(fn(spark, sfDir))
+            (System.nanoTime() - t0) / 1e9
+          }
+          val c = m.total
+          spillMax = (math.max(c.memSpill, spillMax._1),
+            math.max(c.diskSpill, spillMax._2))
+          (w, c.cpuMs / 1e3)
         }
         if (spillMax._1 > 0 || spillMax._2 > 0) spills += name -> spillMax
         // true median: mean of the middle pair for EVEN rep counts — the

@@ -660,9 +660,10 @@ class GraftTable(spark: SparkSession, root: String) {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Tag every Spark job `f` spawns with a phase name ([[graft.core
-    * .PhaseMeter]]'s attribution channel — Spark's own job-description
-    * property, restored afterwards so caller tags survive nesting). */
+  /** Tag every Spark job `f` spawns with a phase name: Spark's own
+    * job-description property, which [[graft.core.Meter]] counts jobs,
+    * tasks and bytes by. Restored afterwards so caller tags survive
+    * nesting. */
   private def withJobDesc[A](desc: String)(f: => A): A = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -786,7 +787,11 @@ class GraftTable(spark: SparkSession, root: String) {
     sweepDeadCachePartials() // catch partials published after a prior GC
     sweepStaleTmp() // crashed writers' .tmp- leftovers (age-guarded)
     val i = withJobDesc("graft.digest.reconcile")(reconciled())
-    val logs = listDirs(ingestP)
+    // drain exactly this snapshot's logs: a log published after it is
+    // left for the next digest, so the sidecar row count below covers
+    // every drained row
+    val drained = i.segments.filter(_.kind == "log").map(_.id)
+    val logs = drained.map(ingestP.resolve)
     if (logs.isEmpty) return
     // newest partial block gets folded into this digest (bounded block
     // count); compact=false keeps prior blocks untouched (pure append)
@@ -800,8 +805,8 @@ class GraftTable(spark: SparkSession, root: String) {
     // (no schema-inference job), so the write is the digest's one job; a
     // column only some inputs carry reads as null in the others
     val inputs = logs ++ consumedBlocks
-    val df = spark.read.schema(GraftTable.footers(spark, inputs).schema)
-      .parquet(inputs.map(_.toString): _*)
+    val schema = GraftTable.footers(spark, inputs).schema
+    val df = spark.read.schema(schema).parquet(inputs.map(_.toString): _*)
     val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     // the Spark write is the long pole: refresh the lock before and
     // after so a > staleMs compaction isn't broken as "crashed"
@@ -859,15 +864,19 @@ class GraftTable(spark: SparkSession, root: String) {
     val blockId = java.util.UUID.randomUUID().toString
     // journal first: from the moment the rename lands, the consumed dirs
     // are superseded even if we crash before deleting them
-    writeDigestJournal(blockId, consumedIds.toSeq,
-      logs.map(_.getFileName.toString))
+    writeDigestJournal(blockId, consumedIds.toSeq, drained)
     Files.move(tmp, blocksP.resolve(blockId), StandardCopyOption.ATOMIC_MOVE)
     val seg = seg0.copy(id = blockId)
     logs.foreach(deleteRecursively)
     consumedBlocks.foreach(deleteRecursively)
     dropCachedPartials(consumedIds.toSeq)
-    val kept = i.segments.filterNot(s => s.kind == "log" || consumedIds(s.id))
-    writeInfo(derive(i.columns, kept :+ seg))
+    // the sidecar as it is now, not as the snapshot saw it: segments
+    // published since stay, and the registry takes every column the new
+    // block carries, so cache reads under it see them all
+    val cur = info()
+    val gone = drained.map(("log", _)).toSet ++ consumedIds.map(("block", _))
+    val kept = cur.segments.filterNot(s => gone((s.kind, s.id)))
+    writeInfo(derive(updatedRegistry(cur.columns, schema), kept :+ seg))
     Try(Files.deleteIfExists(journalP))
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Candidate-volume instrument for every pair-generating family — the
-  * r14 PairStatsDev lesson (q195) made general: when a pair-heavy
+  * r14 q195 pair-count lesson (SCALE.md) made general: when a pair-heavy
   * query's wall drifts between rounds, the FIRST question is whether the
   * input distribution moved (gram/fingerprint/bucket fan-out) or the
   * plan did. This tool prints ONE machine-diffable JSON line per family,
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - `containment` — [[graft.operators.Dedup.containmentPairs]] (q180)
   *  - `lsh_minhash` — [[graft.operators.Dedup.lshCandidates]] (q35/q74)
   *  - `lsh_planes`  — [[graft.operators.Similarity.lshBuckets]] (q194)
-  *  - `setsim`      — covered by the original PairStatsDev (q195)
+  *  - `setsim`      — q195; its r13/r14 counts are in SCALE.md
   *
   * `runMain graft.tools.PairVolumes [sfDir] [family…]` (no family = all).
   */

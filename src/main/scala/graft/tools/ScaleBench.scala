@@ -47,8 +47,6 @@ object ScaleBench {
       SparkSession.builder().master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val meter = new graft.core.SpillMeter
-    spark.sparkContext.addSparkListener(meter)
     for (t <- graft.core.Tables.all)
       try graft.core.Tables.load(spark, dir, t).count()
       catch { case _: Throwable => }
@@ -69,18 +67,20 @@ object ScaleBench {
         // measure the steady state.
         spark.catalog.clearCache()
         mat(name) // untimed warm-up (Bench's steady-state convention)
-        meter.settle(); meter.reset()
-        val ts = (1 to reps).map { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          mat(name)
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
+        val (ts, m) = graft.core.Meter.measure(spark) {
+          (1 to reps).map { _ =>
+            System.gc()
+            val t0 = System.nanoTime()
+            mat(name)
+            (System.nanoTime() - t0) / 1e9
+          }.sorted
+        }
         // PER-RUN averages: the meter accumulated across all timed reps,
         // and emitting the raw sum beside a per-run median silently
         // overstates spill by the rep count (r11 review find)
-        val (smT, sdT, pk, cpuT) = meter.settle()
-        val (sm, sd, cpu) = (smT / reps, sdT / reps, cpuT / reps)
+        val c = m.total
+        val (sm, sd, pk, cpu) =
+          (c.memSpill / reps, c.diskSpill / reps, c.peakExec, c.cpuMs / reps)
         val med = ts(ts.size / 2)
         System.err.println(f"[scalebench] $name med=$med%.3f " +
           f"min=${ts.head}%.3f max=${ts.last}%.3f " +

@@ -51,37 +51,38 @@ object WriteBench {
     val root = java.nio.file.Paths.get(work, "t").toString
     val t = new graft.sources.GraftTable(spark, root)
 
-    // wall AND per-phase TASK executor CPU (SpillMeter, the ScaleBench
-    // metric): the q177 lesson applied to the write path — but with the
-    // write-path twist this session measured: on a noisy virtual disk,
-    // identical back-to-back digests swing 4× in WALL, and whole-PROCESS
-    // CPU tracks wall × busy-cores so it inherits the same noise (and
-    // GC time, metered, was < 1% — not the cause). Task executorCpuTime
-    // counts actual task cycles only, so it is the one number the disk
-    // cannot distort.
-    val meter = new graft.core.SpillMeter
-    spark.sparkContext.addSparkListener(meter)
+    // wall AND per-phase TASK executor CPU (Meter): the q177 lesson
+    // applied to the write path — but with the write-path twist measured
+    // at r12: on a noisy virtual disk, identical back-to-back digests
+    // swing 4× in WALL, and whole-PROCESS CPU tracks wall ×
+    // busy-cores so it inherits the same noise (and GC time, metered, was
+    // < 1% — not the cause). Task executorCpuTime counts actual task
+    // cycles only, so it is the one number the disk cannot distort.
     // r13 (the r12 verdict's top ask): per-PHASE attribution — the
     // whole-section task CPU said "digest exponent 1.6–2.2, undiagnosed";
-    // PhaseMeter splits it by the digest's own stages (schema merge,
-    // repartition+write, post-write stats rescan) via job descriptions.
-    val phases = new graft.core.PhaseMeter
-    spark.sparkContext.addSparkListener(phases)
+    // the meter splits it by the digest's own stages via the job
+    // descriptions GraftTable sets.
     val phaseJson = scala.collection.mutable.LinkedHashMap.empty[String, String]
     import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+    def mb(v: Long): String = f"${v / 1048576.0}%.1f"
     def timed[A](section: String)(f: => A): (A, Double, Double, Double) = {
-      meter.reset(); phases.reset()
-      val g0 = gcMillis
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val gc = (gcMillis - g0) / 1e3
-      val (_, _, _, cpuMs) = meter.settle()
-      phases.settle()
-      phaseJson(section) = phases.phasesJson()
-      (r, wall, cpuMs / 1e3, gc)
+      val ((r, wall, gc), m) = graft.core.Meter.measure(spark) {
+        val g0 = gcMillis
+        val t0 = System.nanoTime()
+        val r = f
+        (r, (System.nanoTime() - t0) / 1e9, (gcMillis - g0) / 1e3)
+      }
+      phaseJson(section) = m.phases.map { case (k, a) =>
+        s""""$k":{"cpu_s":${a.cpuMs / 1e3},"run_s":${a.runMs / 1e3},""" +
+          s""""wall_s":${a.wallMs / 1e3},"tasks":${a.tasks},""" +
+          s""""in_mb":${mb(a.inBytes)},"in_rows":${a.inRecords},""" +
+          s""""out_mb":${mb(a.outBytes)},"out_rows":${a.outRecords},""" +
+          s""""shuf_w_mb":${mb(a.shufWrite)},"shuf_r_mb":${mb(a.shufRead)},""" +
+          s""""spill_mem_mb":${mb(a.memSpill)},"spill_disk_mb":${mb(a.diskSpill)}}"""
+      }.mkString("{", ",", "}")
+      (r, wall, m.total.cpuMs / 1e3, gc)
     }
 
     val (_, ingestS, ingestCpu, ingestGc) = timed("ingest") {

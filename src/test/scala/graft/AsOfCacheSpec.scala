@@ -86,23 +86,11 @@ class AsOfCacheSpec extends SparkSpec {
     // Classification must be pure sidecar arithmetic and every schema
     // comes from the sidecar: ZERO Spark jobs until the result is consumed
     // (the 100-TB requirement — no per-block driver job loops).
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (r2, o2) =
-      try {
-        val res = cache.run(q(700))
-        Thread.sleep(500) // listener bus drain
-        // no miss to write, and the hit/uncacheable scans take their
-        // schemas from the sidecar: no footer schema-inference job
-        assert(jobs.get === 0,
-          s"cache run launched ${jobs.get} jobs — must be O(1), not O(blocks)")
-        res
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val ((r2, o2), m) = graft.core.Meter.measure(spark)(cache.run(q(700)))
+    // no miss to write, and the hit/uncacheable scans take their
+    // schemas from the sidecar: no footer schema-inference job
+    assert(m.total.jobs === 0,
+      s"cache run launched ${m.total.jobs} jobs — must be O(1), not O(blocks)")
     assert(o2 === graft.sources.CacheOutcome(hits = 1, misses = 0, uncacheable = 2, skipped = 0))
     // cutoff 2500: blocks 0,1 always-false → skipped; block2 partial
     val (_, o3) = cache.run(q(2500))

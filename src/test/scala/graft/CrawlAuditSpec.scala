@@ -502,39 +502,27 @@ class CrawlAuditSpec extends SparkSpec {
       .toDF("host", "url")
     val robots = Seq(("ex0.test", "User-agent: *\nCrawl-delay: 2\n"))
       .toDF("host", "robots")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // balanced: construction runs EXACTLY the probe — no pin, no
-      // range sample; the scaladoc's caller contract
-      val plan = graft.operators.Crawl.politeSchedule(urls, robots)
-      Thread.sleep(500) // listener bus drain
-      val balanced = jobs.get
-      info(s"balanced construction jobs: $balanced")
-      assert(balanced <= 5,
-        s"balanced politeSchedule construction ran $balanced jobs " +
-          "(want only the probe's AQE stage-jobs)")
-      assert(plan.count() === 30L)
-      // de-skewed: probe + mega pin + globalRowNumber's construction
-      // jobs; budget pinned so a regression (an unpinned rollup
-      // re-running the urls scan per consumer) is loud
-      jobs.set(0)
-      val plan2 = graft.operators.Crawl.politeSchedule(urls, robots,
-        deskewHostUrls = 1L)
-      Thread.sleep(500) // listener bus drain
-      val deskewed = jobs.get
-      info(s"de-skew construction jobs: $deskewed")
-      assert(deskewed <= 14,
-        s"de-skew politeSchedule construction ran $deskewed jobs " +
-          "(want probe + mega pin + the rank's range pin)")
-      assert(plan2.count() === 30L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // balanced: construction runs EXACTLY the probe — no pin, no range
+    // sample; the scaladoc's caller contract
+    val (plan, m1) = graft.core.Meter.measure(spark)(
+      graft.operators.Crawl.politeSchedule(urls, robots))
+    val balanced = m1.total.jobs
+    info(s"balanced construction jobs: $balanced")
+    assert(balanced <= 5,
+      s"balanced politeSchedule construction ran $balanced jobs " +
+        "(want only the probe's AQE stage-jobs)")
+    assert(plan.count() === 30L)
+    // de-skewed: probe + mega pin + globalRowNumber's construction jobs;
+    // budget pinned so a regression (an unpinned rollup re-running the
+    // urls scan per consumer) is loud
+    val (plan2, m2) = graft.core.Meter.measure(spark)(
+      graft.operators.Crawl.politeSchedule(urls, robots, deskewHostUrls = 1L))
+    val deskewed = m2.total.jobs
+    info(s"de-skew construction jobs: $deskewed")
+    assert(deskewed <= 14,
+      s"de-skew politeSchedule construction ran $deskewed jobs " +
+        "(want probe + mega pin + the rank's range pin)")
+    assert(plan2.count() === 30L)
   }
 
   test("mergeGeneration: the pin is KEPT-generation-sized — a " +

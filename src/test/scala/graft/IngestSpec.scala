@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Meter
 import graft.dsl.SybilQuery
 import graft.sources.{GraftTable, Ingest}
 
@@ -469,23 +470,13 @@ class IngestSpec extends SparkSpec {
     val t = new GraftTable(spark, root)
     t.ingest((0 until 200000).map(i => (i.toLong, (i % 97).toLong)).toDF("id", "v"))
     t.digest()
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskMetrics != null)
-          bytesRead.addAndGet(te.taskMetrics.inputMetrics.bytesRead)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val bytesRead = Meter.measure(spark)(
       t.ingest((0 until 100).map(i => ((200000 + i).toLong, 7L)).toDF("id", "v"))
-      Thread.sleep(500) // listener bus drain
-    } finally spark.sparkContext.removeSparkListener(listener)
+    )._2.total.inBytes
     // the 200k-row table is ~1.5 MB of parquet; an O(batch) ingest touches
     // only the tiny new segment (footer + 100 rows)
-    assert(bytesRead.get < 300000,
-      s"ingest read ${bytesRead.get} bytes — smells like a full-table rescan")
+    assert(bytesRead < 300000,
+      s"ingest read $bytesRead bytes — smells like a full-table rescan")
     val id = t.info().columns.find(_.name == "id").get
     assert(id.max.contains(200099L), "batch extents must merge into the sidecar")
     assert(t.info().rowCount === 200100)
@@ -570,18 +561,7 @@ class IngestSpec extends SparkSpec {
     import spark.implicits._
     val root = tmpDir("graft-jobs")
     val t = new GraftTable(spark, root)
-    def jobsOf(f: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(500) } // listener bus drain
-      finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get
-    }
+    def jobsOf(f: => Unit): Long = Meter.measure(spark)(f)._2.total.jobs
     // a three-file log dir, beside _SUCCESS and .crc files: the row count
     // the footers verify must be the batch's, not a file count. Three
     // partitions without a shuffle: under AQE a repartition's map stage
@@ -603,6 +583,37 @@ class IngestSpec extends SparkSpec {
     assert(jobsOf(t.digest()) === 1)
     assert(t.blockIds.size === 1 && t.info().rowCount === 350)
     assert(t.read().count() === 350)
+  }
+
+  test("digest puts a column the sidecar registry lost back, from its " +
+      "inputs' footers: cached reads see it") {
+    import spark.implicits._
+    val root = tmpDir("graft-regheal")
+    val t = new GraftTable(spark, root)
+    t.ingest((0 until 100).map(i => (1700000000L + i, s"u${i % 3}")).toDF("time", "user"))
+    t.digest()
+    t.ingest((100 until 200).map(i => (1700000000L + i, s"u${i % 3}", s"r${i % 2}"))
+      .toDF("time", "user", "region"))
+    // the registry a stale digest snapshot used to write: the batch's new
+    // column gone, while the log it digests carries it
+    val infoP = java.nio.file.Paths.get(root, "info.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val o = mapper.readTree(Files.readString(infoP))
+    val cols = o.get("columns").asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
+    cols.remove((0 until cols.size).find(cols.get(_).get("name").asText == "region").get)
+    Files.writeString(infoP, mapper.writeValueAsString(o))
+    assert(!t.info().columns.exists(_.name == "region"))
+    t.digest(compact = false)
+    assert(t.info().columns.find(_.name == "region").map(_.dtype) === Some("string"))
+    val q = SybilQuery().groupBy("region").intFilterGt("time", 0).limitTo(10)
+    def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val uncached = canon(t.query(q))
+    assert(uncached.exists(_.contains("r1")), uncached)
+    val cache = new graft.sources.QueryCache(spark, t)
+    val (miss, o1) = cache.run(q)
+    assert(o1.misses === 1 && canon(miss) === uncached)
+    val (hit, o2) = cache.run(q)
+    assert(o2.hits === 1 && canon(hit) === uncached)
   }
 
   test("ingest of a batch whose every column conflicts is a warned no-op") {

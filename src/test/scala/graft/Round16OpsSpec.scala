@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{Stats, Tables}
+import graft.core.{Meter, Stats, Tables}
 import graft.operators.Curation
 
 /** Round-16 hardening: the descending distributed prefix-sum path under
@@ -120,23 +120,6 @@ class Round16OpsSpec extends SparkSpec {
     out.toList
   }
 
-  private def countJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val r = try {
-      val r = body
-      Thread.sleep(500) // listener bus drain
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    (r, jobs.get())
-  }
-
   /** Diverse-context corpus where batching provably triggers: each
     * region k embeds its pair (e.g. "ab") in a 10×10 grid of shared
     * context chars, so the top pairs' counts tower over every
@@ -185,10 +168,10 @@ class Round16OpsSpec extends SparkSpec {
     val df = batchableCorpus.toDF("text")
     // warm once so codegen/scan setup doesn't skew the counts
     graft.operators.Bpe.learnMerges(df, "text", 1).collect()
-    val (_, jobs1) = countJobs(
-      graft.operators.Bpe.learnMerges(df, "text", 1).collect())
-    val (_, jobs4) = countJobs(
-      graft.operators.Bpe.learnMerges(df, "text", 4).collect())
+    val jobs1 = Meter.measure(spark)(
+      graft.operators.Bpe.learnMerges(df, "text", 1).collect())._2.total.jobs
+    val jobs4 = Meter.measure(spark)(
+      graft.operators.Bpe.learnMerges(df, "text", 4).collect())._2.total.jobs
     // crafted counts: round 1 accepts (a,b),(c,d),(e,f); round 2 takes
     // (g,h) — 2 rounds for 4 merges, where the per-merge loop needs 4
     assert(jobs4 <= 2 * jobs1,
@@ -291,19 +274,8 @@ class Round16OpsSpec extends SparkSpec {
     // early exit: a satisfied partition stops consuming its iterator, so
     // the vectorized reader never decodes the remaining batches —
     // records read must shrink vs the full distinct
-    def recordsRead(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          n.addAndGet(t.taskMetrics.inputMetrics.recordsRead); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { body; Thread.sleep(500) }
-      finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
+    def recordsRead(body: => Unit): Long =
+      Meter.measure(spark)(body)._2.total.inRecords
     val fullRead = recordsRead(
       li.select(cols.map(col): _*).distinct().count())
     val earlyRead = recordsRead(

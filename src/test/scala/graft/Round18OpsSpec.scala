@@ -2,29 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Meter
 import graft.operators.Similarity
 
 /** r18 optimization-round specs: the ANN searchers' fused model collect
   * (construction-time driver jobs are a budget, not an accident). */
 class Round18OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  private def countJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val r = try {
-      val r = body
-      Thread.sleep(500) // listener bus drain
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    (r, jobs.get())
-  }
 
   private def synthEmb(n: Int, dims: Int = 16) = {
     val rnd = new scala.util.Random(7)
@@ -40,20 +24,20 @@ class Round18OpsSpec extends SparkSpec {
     Similarity.ivfPqTopK(emb, "vec_id", "embedding",
       queryIds = Seq(100L, 101L), kNN = 3, nClusters = 8, nProbe = 2,
       m = 4, k = 8, rerank = 10)
-    val (_, jobsIvfPq) = countJobs {
+    val jobsIvfPq = Meter.measure(spark) {
       Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         queryIds = Seq(100L, 101L), kNN = 3, nClusters = 8, nProbe = 2,
         m = 4, k = 8, rerank = 10)
-    }
+    }._2.total.jobs
     assert(jobsIvfPq <= 1,
       s"ivfPqTopK construction must fuse centroids+codebooks+queries " +
         s"into one collect, ran $jobsIvfPq jobs")
     Similarity.pqTopK(emb, "vec_id", "embedding",
       queryIds = Seq(100L, 101L), kNN = 3, m = 4, k = 8, rerank = 10)
-    val (_, jobsPq) = countJobs {
+    val jobsPq = Meter.measure(spark) {
       Similarity.pqTopK(emb, "vec_id", "embedding",
         queryIds = Seq(100L, 101L), kNN = 3, m = 4, k = 8, rerank = 10)
-    }
+    }._2.total.jobs
     assert(jobsPq <= 1,
       s"pqTopK construction must fuse codebooks+queries into one " +
         s"collect, ran $jobsPq jobs")
