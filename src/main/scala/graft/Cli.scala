@@ -187,9 +187,9 @@ object Cli {
             timestampFormat = f.getOrElse("timestamp-format", "yyyy-MM-dd HH:mm:ss"),
             exclude = f.get("exclude").map(splitList(_).toSet).getOrElse(Set.empty),
             jsonPath = f.get("path").filter(_ != "$"))
+        // the reference auto-compacts when the log grows (table_ingest.go:63-124);
+        // here digest is explicit, like `sybil digest`, so -skip-compact is a no-op
         table.ingest(df)
-        // reference auto-compacts when the log grows (table_ingest.go:63-124)
-        if (!f.contains("skip-compact")) () // digest is explicit, like `sybil digest`
 
       case "digest" => table.digest()
 

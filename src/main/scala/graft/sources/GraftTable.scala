@@ -7,7 +7,7 @@ import scala.util.Try
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,9 +63,11 @@ case class TableInfo(rowCount: Long, columns: Seq[ColumnInfo],
   *    (FillPartialBlock, table_block_io.go:48-107) so repeated small
   *    ingest+digest cycles keep a bounded block count. Its read schema
   *    comes from its inputs' footers, so the write is its one job.
-  *  - `read()` is ONE multi-path parquet relation over all segment dirs
-  *    (mergeSchema for column evolution) — plan size is O(1), not
-  *    O(blocks).
+  *  - every read of table data (`read()`, `query()`, `withSnapshot()`,
+  *    `exportTsv()`, the query cache) is [[scan]]: ONE multi-path parquet
+  *    relation over the segment dirs of one [[reconciled]] snapshot, under
+  *    its column registry — plan size is O(1), not O(blocks), and
+  *    building it launches no Spark job.
   *  - `trim()` classifies blocks from sidecar stats (no jobs) and deletes
   *    oldest by age/size (table_trim.go:5-58).
   *  - schema evolution is merge-with-first-type-wins: a column whose type
@@ -177,9 +179,9 @@ class GraftTable(spark: SparkSession, root: String) {
     schema.fields.filter(_.dataType == LongType).map(_.name).toSeq
 
   /** The ONE stats aggregate list — shared by the post-hoc scan
-    * ([[segmentStats]]), the in-flight `observe()` path and [[rebuild]]
-    * so they can never drift: row count + per-long column (min, max, cnt,
-    * sum, sumsq). */
+    * ([[segmentStats]]) and the in-flight `observe()` path so they can
+    * never drift: row count + per-long column (min, max, cnt, sum,
+    * sumsq). */
   private def statAggs(longCols: Seq[String]): Seq[Column] =
     Seq(count(lit(1)).as("__rows")) ++ longCols.flatMap { c =>
       Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"),
@@ -200,22 +202,28 @@ class GraftTable(spark: SparkSession, root: String) {
         Option(get(s"sq_$c")).map(_.asInstanceOf[Double]).getOrElse(0.0))
     }
 
-  /** One Spark job over a freshly-written segment dir: row count + per-long
-    * column (min, max, cnt, sum, sumsq). min/max/count come from parquet
-    * footers (aggregate pushdown); sum/sumsq scan only the long columns;
-    * the schema comes from the footers on the driver (no inference job).
-    * Since r13 this is the FALLBACK/recovery path — the write paths
-    * compute the same aggregates in-flight via `observe()` (zero extra
-    * scan); this rescan covers crash-orphaned dirs ([[reconciled]]) and
-    * any observe cross-check mismatch. */
-  private def segmentStats(dir: Path, kind: String): SegmentInfo = {
-    val df = spark.read.schema(GraftTable.footers(spark, Seq(dir)).schema)
-      .parquet(dir.toString)
-    val longCols = longColsOf(df.schema)
+  /** Stats of many segment dirs in ONE scan: the rows of `in` (a
+    * [[footerScan]] of `dirs`) grouped on their segment
+    * ([[GraftTable.segmentOf]]), [[statAggs]] per group. A dir with no
+    * rows gets a zero-row segment. The write paths compute the same
+    * aggregates in flight via `observe()`; this scan covers segments the
+    * sidecar never saw ([[reconciled]]), an observe cross-check mismatch
+    * and [[rebuild]]. */
+  private def segmentStats(in: DataFrame, dirs: Seq[Path]): Seq[SegmentInfo] = {
+    val longCols = longColsOf(in.schema)
     val aggs = statAggs(longCols)
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    SegmentInfo(dir.getFileName.toString, kind, r.getAs[Long]("__rows"),
-      decodeStats(longCols, name => r.getAs[Any](name)))
+    val bySeg = in.groupBy(GraftTable.segmentOf.as("__seg"))
+      .agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getAs[String]("__seg") -> r).toMap
+    dirs.map { d =>
+      val id = d.getFileName.toString
+      bySeg.get(id) match {
+        case Some(r) => SegmentInfo(id, kindOf(d), r.getAs[Long]("__rows"),
+          decodeStats(longCols, r.getAs[Any](_)))
+        case None => SegmentInfo(id, kindOf(d), 0L,
+          longCols.map(ColStat(_, None, None, 0L, 0.0, 0.0)))
+      }
+    }
   }
 
   /** Run `write` with segment stats observed IN-FLIGHT (one pass instead
@@ -229,7 +237,7 @@ class GraftTable(spark: SparkSession, root: String) {
     * into the observation — falls back LOUDLY to the rescan, because
     * these numbers feed zone maps and extent arbitration, where a wrong
     * min/max is a correctness bug, not a perf bug. */
-  private def observedStats(df: DataFrame, outDir: Path, kind: String,
+  private def observedStats(df: DataFrame, outDir: Path,
       expectedRows: Option[Long])(write: DataFrame => Unit): SegmentInfo = {
     val longCols = longColsOf(df.schema)
     val aggs = statAggs(longCols)
@@ -243,9 +251,9 @@ class GraftTable(spark: SparkSession, root: String) {
     if (verified != rows) {
       System.err.println(s"[graft] observe mismatch on $outDir: observed " +
         s"$rows rows, verified $verified — rescanning (stats stay exact)")
-      segmentStats(outDir, kind)
+      segmentStats(footerScan(Seq(outDir)), Seq(outDir)).head
     } else
-      SegmentInfo(outDir.getFileName.toString, kind, rows,
+      SegmentInfo(outDir.getFileName.toString, kindOf(outDir), rows,
         decodeStats(longCols, m(_)))
   }
 
@@ -325,6 +333,7 @@ class GraftTable(spark: SparkSession, root: String) {
   // ---- digest journal (crash-safe compaction) ----------------------------
 
   private val journalP = rootP.resolve("digest.journal")
+  private val lockP = rootP.resolve("digest.lock")
 
   private case class DigestJournal(newBlock: String,
       consumedBlocks: Seq[String], consumedLogs: Seq[String])
@@ -392,17 +401,20 @@ class GraftTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Finish an orphaned journal (crashed digest) from a read path: grab the
-    * digest lock so the delete is race-safe — as the lock-holder, no new
-    * digest can have replaced the journal under us — and fall back to the
-    * lock-free dir-cleanup-only recovery when a live digest holds it. */
+  /** Finish an orphaned journal (one with no digest lock: a crashed
+    * digest) from a lock-free path: grab the lock so the delete is
+    * race-safe — as the lock-holder, no new digest can have replaced the
+    * journal under us — or, when a live digest holds it, fall back to the
+    * lock-free dir-cleanup-only recovery. */
   private def finishOrphanJournal(): Unit =
-    if (grabDigestLock())
-      try recoverDigestJournal(haveLock = true) finally releaseDigestLock()
-    else recoverDigestJournal(haveLock = false)
+    if (Files.exists(journalP) && !Files.exists(lockP)) {
+      if (grabDigestLock())
+        try recoverDigestJournal(haveLock = true) finally releaseDigestLock()
+      else recoverDigestJournal(haveLock = false)
+    }
 
   /** Closed-stream directory listing (raw Files.list leaks the dir fd). */
-  private def listChildren(p: Path): Seq[Path] = {
+  private[sources] def listChildren(p: Path): Seq[Path] = {
     if (!Files.isDirectory(p)) return Nil
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()
@@ -473,41 +485,54 @@ class GraftTable(spark: SparkSession, root: String) {
       .foreach(p => Try(Files.deleteIfExists(p)))
   }
 
+  /** THE live listing: segment dirs on disk (blocks, then logs) minus
+    * those a committed digest journal supersedes — their rows already
+    * live in the merged block, so reading both would double-count (the
+    * window between a digest's rename and its cleanup, or after a crash
+    * inside it). No recovery, no sidecar write. */
+  private def liveDirs(): Seq[Path] = {
+    val (supBlocks, supLogs) = journalSuperseded()
+    listDirs(blocksP).filterNot(d => supBlocks(d.getFileName.toString)) ++
+      listDirs(ingestP).filterNot(d => supLogs(d.getFileName.toString))
+  }
+
+  private def kindOf(dir: Path): String = if (dir.getParent == ingestP) "log" else "block"
+
+  private def segmentDir(s: SegmentInfo): Path =
+    (if (s.kind == "log") ingestP else blocksP).resolve(s.id)
+
+  /** Whole-segment rewrites (digest, optimize) and sidecar repair (the
+    * stats scan, [[rebuild]]) read their inputs under the inputs' own
+    * footer schema, read on the driver: never under the registry they
+    * rewrite, and with no schema-inference job. */
+  private def footerScan(dirs: Seq[Path]): DataFrame =
+    spark.read.schema(GraftTable.footers(spark, dirs).schema)
+      .parquet(dirs.map(_.toString): _*)
+
   /** Reconcile sidecar segments with the directories actually on disk
     * (crash recovery): drop entries whose dir vanished; drop segments a
     * committed digest journal supersedes (finishing its cleanup when no
     * live digest holds the lock); compute stats for dirs the sidecar has
-    * never seen (only happens after a crash between a write and its
-    * sidecar update). */
+    * never seen, in one scan (after a crash between a write and its
+    * sidecar update, or in the moment between the two). */
   private[sources] def reconciled(): TableInfo = {
-    if (Files.exists(journalP) && !Files.exists(rootP.resolve("digest.lock")))
-      finishOrphanJournal()
-    // if a digest is live (lock held), don't touch dirs — but still exclude
-    // superseded segments from the view so their rows are never read twice
-    val (supBlocks, supLogs) = journalSuperseded()
+    finishOrphanJournal()
     val i = info()
-    val logIds = listDirs(ingestP).map(_.getFileName.toString)
-      .filterNot(supLogs)
-    val blockIdsD = listDirs(blocksP).map(_.getFileName.toString)
-      .filterNot(supBlocks)
+    val live = liveDirs()
+    val liveKeys = live.map(d => (kindOf(d), d.getFileName.toString)).toSet
     val have = i.segments.map(s => (s.kind, s.id)).toSet
-    val kept = i.segments.filter(s =>
-      if (s.kind == "log") logIds.contains(s.id) else blockIdsD.contains(s.id))
-    val freshLogIds = logIds.filterNot(id => have(("log", id)))
-    val freshBlockIds = blockIdsD.filterNot(id => have(("block", id)))
-    val fresh =
-      freshLogIds.map(id => segmentStats(ingestP.resolve(id), "log")) ++
-      freshBlockIds.map(id => segmentStats(blocksP.resolve(id), "block"))
-    // crash-orphaned segments (dir renamed, writeInfo never ran) may
-    // carry columns the registry never saw: extend it from their parquet
-    // footers (read on the driver, no job), or first-type-wins enforcement
+    val kept = i.segments.filter(s => liveKeys((s.kind, s.id)))
+    val freshDirs = live.filterNot(d => have((kindOf(d), d.getFileName.toString)))
+    // segments the sidecar never saw may carry columns the registry never
+    // saw: extend it from their footers, or first-type-wins enforcement
     // and extent tracking would silently skip those columns — a later
-    // conflicting ingest would then pass checkSchema and break the
-    // merged read
-    val registry = (freshLogIds.map(ingestP.resolve) ++
-        freshBlockIds.map(blocksP.resolve))
-      .foldLeft(i.columns)((reg, dir) =>
-        updatedRegistry(reg, GraftTable.footers(spark, Seq(dir)).schema))
+    // conflicting ingest would then pass checkSchema and break the read
+    val (registry, fresh) =
+      if (freshDirs.isEmpty) (i.columns, Nil)
+      else {
+        val in = footerScan(freshDirs)
+        (updatedRegistry(i.columns, in.schema), segmentStats(in, freshDirs))
+      }
     val next = derive(registry, kept ++ fresh)
     if (next != i) writeInfo(next)
     next
@@ -528,44 +553,23 @@ class GraftTable(spark: SparkSession, root: String) {
     i.segments.filter(s => s.kind == "block" && s.rows < ChunkSize).lastOption
 
   /** Recompute the whole sidecar by scanning current data (the reference's
-    * `rebuild` command — table_recover_info.go). ONE job: per-segment
-    * grouping on the input file path. */
+    * `rebuild` command — table_recover_info.go): one stats scan over every
+    * live segment. */
   def rebuild(): TableInfo = {
-    if (Files.exists(journalP) && !Files.exists(rootP.resolve("digest.lock")))
-      finishOrphanJournal()
-    val (supBlocks, supLogs) = journalSuperseded()
-    val logDirs = listDirs(ingestP).filterNot(d => supLogs(d.getFileName.toString))
-    val blockDirs = listDirs(blocksP).filterNot(d => supBlocks(d.getFileName.toString))
-    val dirs = blockDirs ++ logDirs
+    finishOrphanJournal()
+    val dirs = liveDirs()
     val i =
       if (dirs.isEmpty) TableInfo(0, Nil)
       else {
-        val df = readDirs(dirs)
-        val schema = df.schema
-        val longCols = longColsOf(schema)
-        // greedy .* pins the match to the LAST /ingest|blocks/ component:
-        // a table ROOTED under a path containing "blocks" or "ingest"
-        // (e.g. /data/blocks/t1) would otherwise match the root component
-        // and collapse every segment into one bogus id
-        val seg = regexp_extract(input_file_name(),
-          ".*/(ingest|blocks)/([^/]+)/", 2)
-        val kindC = regexp_extract(input_file_name(),
-          ".*/(ingest|blocks)/([^/]+)/", 1)
-        val aggs = statAggs(longCols)
-        val rows = df.groupBy(seg.as("__seg"), kindC.as("__kind"))
-          .agg(aggs.head, aggs.tail: _*).collect()
-        val segs = rows.toSeq.map { r =>
-          SegmentInfo(r.getAs[String]("__seg"),
-            if (r.getAs[String]("__kind") == "ingest") "log" else "block",
-            r.getAs[Long]("__rows"), decodeStats(longCols, r.getAs[Any](_)))
-        }
-        val registry = schema.fields.toSeq.map(f =>
+        val in = footerScan(dirs)
+        val registry = in.schema.fields.toSeq.map(f =>
           ColumnInfo(f.name, typeName(f.dataType), None, None))
         // keep the old sidecar's segment order (the age order
         // [[topUpBlock]] reads); segments it never listed go last
         val order = Try(info().segments.map(_.id)).getOrElse(Nil)
           .zipWithIndex.toMap
-        derive(registry, segs.sortBy(s => order.getOrElse(s.id, Int.MaxValue)))
+        derive(registry, segmentStats(in, dirs)
+          .sortBy(s => order.getOrElse(s.id, Int.MaxValue)))
       }
     writeInfo(i)
     i
@@ -693,15 +697,17 @@ class GraftTable(spark: SparkSession, root: String) {
     // append computes its IntInfo while writing too (row_store.go). The
     // driver-side footer-count cross-check inside observedStats keeps the
     // sidecar exact even if an observation ever double-counted.
-    val seg0 = observedStats(clean, tmp, "log", expectedRows = None) { d =>
+    val seg0 = observedStats(clean, tmp, expectedRows = None) { d =>
       withJobDesc("graft.ingest.write") {
         d.write.mode(SaveMode.ErrorIfExists).parquet(tmp.toString)
       }
     }
     val seg = seg0.copy(id = id)
     Files.move(tmp, ingestP.resolve(id), StandardCopyOption.ATOMIC_MOVE)
+    // a reader's reconciled() may have added this segment since the rename
     val i = info()
-    writeInfo(derive(updatedRegistry(i.columns, clean.schema), i.segments :+ seg))
+    writeInfo(derive(updatedRegistry(i.columns, clean.schema),
+      i.segments.filterNot(s => s.kind == "log" && s.id == id) :+ seg))
   }
 
   /** Total regular-file bytes under a dir (split-size arithmetic). */
@@ -716,12 +722,6 @@ class GraftTable(spark: SparkSession, root: String) {
     if (!Files.exists(p)) Nil
     else listChildren(p).filter(Files.isDirectory(_))
       .filterNot(_.getFileName.toString.startsWith(".tmp")).sortBy(_.toString)
-
-  /** One multi-path parquet relation over segment dirs (O(1) plan size).
-    * mergeSchema covers column evolution; type conflicts cannot occur
-    * because checkSchema enforces first-type-wins at ingest. */
-  private def readDirs(dirs: Seq[Path]): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dirs.map(_.toString): _*)
 
   /** Drain the ingest log into immutable blocks, topping up the newest
     * partial (<64Ki-row) block first (FillPartialBlock,
@@ -739,7 +739,6 @@ class GraftTable(spark: SparkSession, root: String) {
     * digest's write-then-rename ordering makes re-running safe). Returns
     * false when another live digest holds the lock. */
   private def grabDigestLock(staleMs: Long = 10 * 60 * 1000): Boolean = {
-    val lockP = rootP.resolve("digest.lock")
     try {
       Files.writeString(lockP, ProcessHandle.current().pid().toString,
         java.nio.file.StandardOpenOption.CREATE_NEW)
@@ -767,23 +766,31 @@ class GraftTable(spark: SparkSession, root: String) {
     * parts of a digest/optimize so a compaction legitimately exceeding
     * `staleMs` is not mistaken for a crashed one and broken mid-write. */
   private def touchDigestLock(): Unit = {
-    Try(Files.setLastModifiedTime(rootP.resolve("digest.lock"),
+    Try(Files.setLastModifiedTime(lockP,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis())))
     ()
   }
 
   private def releaseDigestLock(): Unit =
-    Try(Files.deleteIfExists(rootP.resolve("digest.lock")))
+    Try(Files.deleteIfExists(lockP))
 
-  def digest(compact: Boolean = true): Unit = {
-    if (!grabDigestLock()) throw new IllegalStateException(
-      s"table $root: another digest is in progress (digest.lock held)")
-    try digestLocked(compact) finally releaseDigestLock()
+  /** Run `body` holding the digest lock, after finishing any crashed
+    * digest's journal; throws IllegalStateException saying `busy` when a
+    * live digest holds the lock. */
+  private def withDigestLock[A](busy: String)(body: => A): A = {
+    if (!grabDigestLock()) throw new IllegalStateException(s"table $root: $busy")
+    try {
+      recoverDigestJournal(haveLock = true)
+      body
+    } finally releaseDigestLock()
   }
 
+  def digest(compact: Boolean = true): Unit =
+    withDigestLock("another digest is in progress (digest.lock held)")(
+      digestLocked(compact))
+
   private def digestLocked(compact: Boolean): Unit = {
-    recoverDigestJournal(haveLock = true) // finish any crashed digest first
     sweepDeadCachePartials() // catch partials published after a prior GC
     sweepStaleTmp() // crashed writers' .tmp- leftovers (age-guarded)
     val i = withJobDesc("graft.digest.reconcile")(reconciled())
@@ -801,12 +808,9 @@ class GraftTable(spark: SparkSession, root: String) {
 
     val segRows = i.segments.filter(s =>
       s.kind == "log" || consumedIds(s.id)).map(_.rows).sum
-    // the read schema is the inputs' footer schemas merged on the driver
-    // (no schema-inference job), so the write is the digest's one job; a
-    // column only some inputs carry reads as null in the others
+    // a column only some inputs carry reads as null in the others
     val inputs = logs ++ consumedBlocks
-    val schema = GraftTable.footers(spark, inputs).schema
-    val df = spark.read.schema(schema).parquet(inputs.map(_.toString): _*)
+    val df = footerScan(inputs)
     val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
     // the Spark write is the long pole: refresh the lock before and
     // after so a > staleMs compaction isn't broken as "crashed"
@@ -841,7 +845,7 @@ class GraftTable(spark: SparkSession, root: String) {
         // one TINY output file per task; ingest logs are exactly the
         // many-small-files shape, so pack them densely
         spark.conf.set(openConf, (256L << 10).toString)
-        observedStats(df, tmp, "block", expectedRows = Some(segRows)) { d =>
+        observedStats(df, tmp, expectedRows = Some(segRows)) { d =>
           withJobDesc("graft.digest.write") {
             d.write
               .option("maxRecordsPerFile", ChunkSize.toLong)
@@ -872,11 +876,12 @@ class GraftTable(spark: SparkSession, root: String) {
     dropCachedPartials(consumedIds.toSeq)
     // the sidecar as it is now, not as the snapshot saw it: segments
     // published since stay, and the registry takes every column the new
-    // block carries, so cache reads under it see them all
+    // block carries, so cache reads under it see them all. A reader's
+    // reconciled() may have added the new block since the rename.
     val cur = info()
-    val gone = drained.map(("log", _)).toSet ++ consumedIds.map(("block", _))
+    val gone = (drained.map(("log", _)) ++ (consumedIds + blockId).map(("block", _))).toSet
     val kept = cur.segments.filterNot(s => gone((s.kind, s.id)))
-    writeInfo(derive(updatedRegistry(cur.columns, schema), kept :+ seg))
+    writeInfo(derive(updatedRegistry(cur.columns, df.schema), kept :+ seg))
     Try(Files.deleteIfExists(journalP))
   }
 
@@ -897,126 +902,134 @@ class GraftTable(spark: SparkSession, root: String) {
     * touched — run `digest()` first for full coverage.
     */
   def optimize(xCol: String, yCol: String, bits: Int = 16,
-      rowsPerPartition: Long = ChunkSize): Unit = {
-    if (!grabDigestLock()) throw new IllegalStateException(
-      s"table $root: another digest/optimize is in progress (digest.lock held)")
-    try {
-      recoverDigestJournal(haveLock = true)
-      val i = reconciled()
-      val blocks = i.segments.filter(_.kind == "block")
-      if (blocks.isEmpty) return
-      def extent(c: String): Option[(Long, Long)] =
-        i.columns.find(_.name == c).flatMap(ci => ci.min.zip(ci.max))
-      val span = (1L << bits) - 1
-      def norm(c: String): Column = extent(c) match {
-        case Some((lo, hi)) if hi > lo =>
-          // clamp BOTH ends: values outside the sidecar extents exist by
-          // design (the extent merge is outlier-rejecting), and an
-          // unclamped v < lo would z-order as sign-extended garbage in
-          // the hottest tile instead of the low edge
-          greatest(lit(0L), least(lit(span),
-            ((col(c).cast("double") - lo) / (hi - lo) * span).cast("long")))
-        case _ => lit(0L)
+      rowsPerPartition: Long = ChunkSize): Unit =
+    withDigestLock("another digest/optimize is in progress (digest.lock held)")(
+      optimizeLocked(xCol, yCol, bits, rowsPerPartition))
+
+  private def optimizeLocked(xCol: String, yCol: String, bits: Int,
+      rowsPerPartition: Long): Unit = {
+    val i = reconciled()
+    val blocks = i.segments.filter(_.kind == "block")
+    if (blocks.isEmpty) return
+    def extent(c: String): Option[(Long, Long)] =
+      i.columns.find(_.name == c).flatMap(ci => ci.min.zip(ci.max))
+    val span = (1L << bits) - 1
+    def norm(c: String): Column = extent(c) match {
+      case Some((lo, hi)) if hi > lo =>
+        // clamp BOTH ends: values outside the sidecar extents exist by
+        // design (the extent merge is outlier-rejecting), and an
+        // unclamped v < lo would z-order as sign-extended garbage in
+        // the hottest tile instead of the low edge
+        greatest(lit(0L), least(lit(span),
+          ((col(c).cast("double") - lo) / (hi - lo) * span).cast("long")))
+      case _ => lit(0L)
+    }
+    val consumed = blocks.map(_.id)
+    val df = footerScan(consumed.map(blocksP.resolve))
+    val z = Bucketing.zorder2(norm(xCol), norm(yCol), bits)
+    val n = math.max(1L, blocks.map(_.rows).sum)
+    val parts = math.max(1, (n / rowsPerPartition).toInt +
+      (if (n % rowsPerPartition > 0) 1 else 0))
+    val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    // UNLIKE digest, the range shuffle here is the PRODUCT: z-order
+    // clustering is a global sort, so the exchange stays (the shuffle-
+    // free digest rule doesn't apply — you can't cluster without
+    // moving rows). Stats still ride the write (observe, zero extra
+    // scan), with the sidecar's own block-row total cross-checking.
+    val seg0 = observedStats(df.withColumn("__z", z)
+        .repartitionByRange(parts, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z"), tmp, expectedRows = Some(n)) { d =>
+      withJobDesc("graft.optimize.write") {
+        d.write
+          .option("parquet.block.size", (8L * 1024 * 1024).toString)
+          .mode(SaveMode.ErrorIfExists)
+          .parquet(tmp.toString)
       }
-      val consumed = blocks.map(_.id)
-      val df = readDirs(consumed.map(blocksP.resolve))
-      val z = Bucketing.zorder2(norm(xCol), norm(yCol), bits)
-      val n = math.max(1L, blocks.map(_.rows).sum)
-      val parts = math.max(1, (n / rowsPerPartition).toInt +
-        (if (n % rowsPerPartition > 0) 1 else 0))
-      val tmp = blocksP.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-      // UNLIKE digest, the range shuffle here is the PRODUCT: z-order
-      // clustering is a global sort, so the exchange stays (the shuffle-
-      // free digest rule doesn't apply — you can't cluster without
-      // moving rows). Stats still ride the write (observe, zero extra
-      // scan), with the sidecar's own block-row total cross-checking.
-      val seg0 = observedStats(df.withColumn("__z", z)
-          .repartitionByRange(parts, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z"), tmp, "block", expectedRows = Some(n)) { d =>
-        withJobDesc("graft.optimize.write") {
-          d.write
-            .option("parquet.block.size", (8L * 1024 * 1024).toString)
-            .mode(SaveMode.ErrorIfExists)
-            .parquet(tmp.toString)
-        }
-      }
-      val blockId = java.util.UUID.randomUUID().toString
-      writeDigestJournal(blockId, consumed, Nil)
-      Files.move(tmp, blocksP.resolve(blockId), StandardCopyOption.ATOMIC_MOVE)
-      val seg = seg0.copy(id = blockId)
-      consumed.map(blocksP.resolve).foreach(deleteRecursively)
-      dropCachedPartials(consumed)
-      val kept = i.segments.filterNot(s => s.kind == "block")
-      writeInfo(derive(i.columns, kept :+ seg))
-      Try(Files.deleteIfExists(journalP)); ()
-    } finally releaseDigestLock()
+    }
+    val blockId = java.util.UUID.randomUUID().toString
+    writeDigestJournal(blockId, consumed, Nil)
+    Files.move(tmp, blocksP.resolve(blockId), StandardCopyOption.ATOMIC_MOVE)
+    val seg = seg0.copy(id = blockId)
+    consumed.map(blocksP.resolve).foreach(deleteRecursively)
+    dropCachedPartials(consumed)
+    val kept = i.segments.filterNot(s => s.kind == "block")
+    writeInfo(derive(i.columns, kept :+ seg))
+    Try(Files.deleteIfExists(journalP)); ()
   }
 
   /** Block ids (immutable once digested) — the unit of cache/skip logic.
     * Excludes blocks a committed digest journal supersedes. */
-  def blockIds: Seq[String] = {
-    val (supBlocks, _) = journalSuperseded()
-    listDirs(blocksP).map(_.getFileName.toString).filterNot(supBlocks)
-  }
-
-  /** Path of one block dir. */
-  private[sources] def blockPath(id: String): Path = blocksP.resolve(id)
+  def blockIds: Seq[String] =
+    liveDirs().filter(kindOf(_) == "block").map(_.getFileName.toString)
 
   /** Root directory for per-block query-cache entries. */
   private[sources] def cacheRoot: Path = rootP.resolve("cache")
 
-  /** All digested blocks, optionally + the undigested ingest log. Segments
-    * a committed digest journal supersedes are excluded — their rows are
-    * already in the merged block, so reading both would double-count (the
-    * window between a digest's rename and its cleanup, or after a crash
-    * inside it). */
-  def read(readLog: Boolean = false): DataFrame = readListed(readLog)._2
-
-  private def snapshotDirs(readLog: Boolean): Seq[Path] = {
-    val (supBlocks, supLogs) = journalSuperseded()
-    listDirs(blocksP).filterNot(d => supBlocks(d.getFileName.toString)) ++
-      (if (readLog) listDirs(ingestP).filterNot(d => supLogs(d.getFileName.toString)) else Nil)
+  /** THE read of table data: one multi-path parquet relation (O(1) plan
+    * size) over `segments` of the [[reconciled]] snapshot `snap`, under
+    * its column registry — no job, and a column some segments lack reads
+    * as null. Once Spark has listed the files, every scanned segment must
+    * still be live: a digest that commits meanwhile renames its new block
+    * in BEFORE it deletes what it consumed, so a consumed dir emptied
+    * under the listing (zero rows, no error) shows here as a
+    * FileNotFoundException, which [[GraftTable.retryStaleListing]]
+    * relists. No segments: an empty frame of the same schema. */
+  private[sources] def scan(snap: TableInfo, segments: Seq[SegmentInfo]): DataFrame = {
+    val schema = readSchema(snap)
+    if (segments.isEmpty) return spark.createDataFrame(java.util.List.of[Row](), schema)
+    val dirs = segments.map(segmentDir)
+    val df = spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
+    val live = liveDirs().toSet
+    dirs.find(!live(_)).foreach(d => throw new java.io.FileNotFoundException(
+      s"table $root: segment $d was consumed while listing; relisting"))
+    df
   }
 
-  /** [[read]], with the segment dirs it listed. */
-  private def readListed(readLog: Boolean): (Seq[Path], DataFrame) = {
-    val dirs = snapshotDirs(readLog)
-    require(dirs.nonEmpty, s"table $root is empty")
-    (dirs, readDirs(dirs))
+  /** The registry as a read schema. A type string that does not parse
+    * back (a struct field name that needs quoting) takes its type from the
+    * snapshot's footers instead, with one log line. */
+  private def readSchema(snap: TableInfo): StructType = {
+    lazy val footed = if (snap.segments.isEmpty) new StructType()
+      else GraftTable.footers(spark, snap.segments.map(segmentDir)).schema
+    StructType(snap.columns.flatMap { c =>
+      Try(DataType.fromDDL(c.dtype)).toOption.map(StructField(c.name, _)).orElse {
+        val f = footed.find(_.name == c.name)
+        System.err.println(s"[graft] column ${c.name}: registry type ${c.dtype} does not " +
+          s"parse; ${f.fold("no segment carries it")("footer type " + _.dataType.sql)}")
+        f
+      }
+    })
   }
 
-  /** Run `f` against a fresh snapshot relation, retrying with a re-listed
-    * snapshot when a concurrent digest/optimize/trim invalidates the file
-    * listing mid-job — the reference re-runs a query when it observes
-    * "BLOCK SIZE CHANGED" under a concurrent digest (table_query.go); the
-    * Spark-native form of that signal is a FileNotFoundException (or the
-    * "underlying files have been updated" SparkException) from a scan
-    * whose dirs were consumed after plan-time listing. Every individual
-    * listing is a CONSISTENT snapshot by the journal protocol (the merged
-    * block becomes visible in the same instant its consumed segments
-    * become excluded — [[journalSuperseded]]), so retrying the whole
-    * query on a fresh listing yields exactly-once rows as of some commit
-    * point, never a double-count or a partial segment. Anything that is
-    * not a stale-listing failure rethrows immediately. */
+  /** All digested blocks, optionally + the undigested ingest log. */
+  def read(readLog: Boolean = false): DataFrame = readFrom(reconciled(), readLog)
+
+  private def readFrom(snap: TableInfo, readLog: Boolean): DataFrame = {
+    val segments = snap.segments.filter(s => readLog || s.kind == "block")
+    require(segments.nonEmpty, s"table $root is empty")
+    scan(snap, segments)
+  }
+
+  /** Run `f` against a fresh snapshot relation, retrying on a fresh
+    * snapshot when a concurrent digest/optimize/trim invalidates the
+    * listing — the reference re-runs a query when it observes "BLOCK SIZE
+    * CHANGED" under a concurrent digest (table_query.go). Every snapshot
+    * is CONSISTENT by the journal protocol (the merged block becomes
+    * visible in the same instant its consumed segments become excluded —
+    * [[liveDirs]]), so a retry yields exactly-once rows as of some commit
+    * point, never a double-count or a partial segment. */
   def withSnapshot[A](readLog: Boolean = false, maxRetries: Int = 5)(
       f: DataFrame => A): A =
-    GraftTable.retryStaleListing(maxRetries) {
-      val (dirs, df) = readListed(readLog)
-      // Spark lists each dir's files while `df` is built. A digest that
-      // commits meanwhile renames its new block in BEFORE it deletes what
-      // it consumed, so a listed dir emptied under that listing (read as
-      // zero rows, no error) always shows as a changed dir set here
-      if (snapshotDirs(readLog) != dirs) throw new java.io.FileNotFoundException(
-        s"table $root: segments changed while listing; relisting")
-      f(df)
-    }
+    GraftTable.retryStaleListing(maxRetries)(f(read(readLog)))
 
-  /** Run a DSL query against the table, injecting the sidecar's
+  /** Run a DSL query against the table, injecting the snapshot's
     * outlier-resistant extents for hist bucketing (the reference reads
     * stored IntInfo instead of rescanning — table_column_info.go). */
-  def query(q: graft.dsl.SybilQuery, readLog: Boolean = false): DataFrame =
-    q.withExtents(info().extents).run(read(readLog))
+  def query(q: graft.dsl.SybilQuery, readLog: Boolean = false): DataFrame = {
+    val snap = reconciled()
+    q.withExtents(snap.extents).run(readFrom(snap, readLog))
+  }
 
   /** Blocks that `trim` WOULD delete — the reference's `-list` dry run
     * (cmd_trim.go:32-36). The same plan [[trim]] executes; deletes
@@ -1059,11 +1072,8 @@ class GraftTable(spark: SparkSession, root: String) {
     // would fail mid-job), and a crashed digest's superseded dirs would
     // inflate the byte budget. Recovery runs first so the plan only ever
     // sizes live dirs.
-    if (!grabDigestLock()) throw new IllegalStateException(
-      s"table $root: a digest is in progress (digest.lock held); " +
-        "trim would delete blocks it is reading")
-    try {
-      recoverDigestJournal(haveLock = true)
+    withDigestLock("a digest is in progress (digest.lock held); " +
+        "trim would delete blocks it is reading") {
       val i = reconciled()
       val victims = trimVictims(i, maxBytes, olderThan, timeCol)
       victims.foreach(id => deleteRecursively(blocksP.resolve(id)))
@@ -1073,7 +1083,7 @@ class GraftTable(spark: SparkSession, root: String) {
           s.kind == "block" && victims.contains(s.id))))
       }
       victims.map(blocksP.resolve(_).toString)
-    } finally releaseDigestLock()
+    }
   }
 
   /** Gzipped TSV export of matching records (ExportBlockData,
@@ -1089,7 +1099,7 @@ class GraftTable(spark: SparkSession, root: String) {
     * digest) may race on the same dir — deleteIfExists + swallowed
     * NoSuchFile (raw, or wrapped in UncheckedIOException by the stream
     * traversal) make the loser a no-op instead of a crashed query. */
-  private def deleteRecursively(p: Path): Unit =
+  private[sources] def deleteRecursively(p: Path): Unit =
     try {
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder[Path]())
@@ -1117,7 +1127,10 @@ object GraftTable {
     * did not write, the converted Parquet schema. A vanished path or a dir
     * with no data files throws FileNotFoundException, which
     * [[retryStaleListing]] treats as a stale listing. Cost is one footer
-    * read per file: fine for a digest's inputs, not for a whole table. */
+    * read per file. Digest reads its inputs' footers; `optimize` and
+    * `rebuild` read every block's, which is small beside the full read
+    * and rewrite of every row they go on to do. Reads of table data take
+    * the sidecar registry instead, and need no footer. */
   def footers(spark: SparkSession, paths: Seq[Path]): Footers = {
     val files = paths.flatMap(dataFiles)
     if (files.isEmpty) throw new java.io.FileNotFoundException(
@@ -1139,6 +1152,9 @@ object GraftTable {
         acc.rows + footer.getBlocks.asScala.map(_.getRowCount).sum)
     }
   }
+
+  /** The segment a row comes from: the name of its file's parent dir. */
+  private[sources] def segmentOf: Column = element_at(split(input_file_name(), "/"), -2)
 
   private def dataFiles(p: Path): Seq[Path] =
     if (Files.isRegularFile(p)) Seq(p)

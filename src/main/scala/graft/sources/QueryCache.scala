@@ -2,9 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.security.MessageDigest
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,10 +44,11 @@ case class CacheOutcome(hits: Int, misses: Int, uncacheable: Int, skipped: Int)
   *     partially-covered blocks and the top-up block one more scan, and
   *     both feed one merge aggregate.
   * Every schema comes from one sidecar snapshot per run, never from a
-  * parquet footer job: block dirs read under the column registry
-  * (`TableInfo.columns`, sybil's info.db role), so a column some blocks
-  * lack reads as null there; partials read under the analyzed schema of
-  * the partial aggregate over an empty frame of that registry schema.
+  * parquet footer job: block dirs read through [[GraftTable.scan]] under
+  * the column registry (`TableInfo.columns`, sybil's info.db role), so a
+  * column some blocks lack reads as null there; partials read under the
+  * analyzed schema of the partial aggregate over an empty frame of that
+  * registry schema.
   * The driver never loops jobs over blocks — the pattern that melts down
   * at 100 TB.
   *
@@ -177,8 +177,8 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     // compacting digest folds it into a new block and deletes it.
     val topUp = table.topUpBlock(snap).map(_.id)
     var hitPaths = List.empty[Path]
-    var missIds = List.empty[String]
-    var uncacheableIds = List.empty[String]
+    var misses = List.empty[SegmentInfo]
+    var uncacheable = List.empty[SegmentInfo]
     var skipped = 0
     for (s <- snap.segments if s.kind == "block") {
       val extent = s.stat(q.timeCol).flatMap(c => c.min.zip(c.max))
@@ -195,39 +195,21 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
       else if (classes.forall(_ == AlwaysTrue) && noNullTimes &&
           !topUp.contains(s.id)) {
         val dest = table.cacheRoot.resolve(key).resolve(s.id)
-        if (Files.exists(dest)) hitPaths ::= dest else missIds ::= s.id
-      } else uncacheableIds ::= s.id
+        if (Files.exists(dest)) hitPaths ::= dest else misses ::= s
+      } else uncacheable ::= s
     }
 
-    // block dirs read under the sidecar's type registry (sybil's info.db
-    // role): no schema-inference job, and a column that some blocks lack
-    // reads as null there. A registry type string that does not parse back
-    // (a struct field name needing quotes) leaves its column out: a query
-    // naming it fails to resolve, loudly, and no other query needs it.
-    val blockSchema = StructType(snap.columns.flatMap(c =>
-      scala.util.Try(DataType.fromDDL(c.dtype)).toOption.map(StructField(c.name, _))))
-    def blocks(ids: Seq[String]): DataFrame =
-      spark.read.schema(blockSchema).parquet(ids.map(table.blockPath(_).toString): _*)
-    val noRows = spark.createDataFrame(java.util.List.of[Row](), blockSchema)
+    val noRows = table.scan(snap, Nil)
 
     // ONE job computes every miss block's partial: multi-path scan, block
     // id cut from the file path, partitioned write straight into the
     // cache layout (cache/<key>/<blockId>).
-    if (missIds.nonEmpty) {
-      // the LAST /blocks/ component names the block (a table rooted under
-      // a path containing "blocks" must not take the root's segment)
-      val withBlock = blocks(missIds).withColumn("__block",
-        substring_index(substring_index(input_file_name(), "/blocks/", -1), "/", 1))
+    if (misses.nonEmpty) {
+      val withBlock = table.scan(snap, misses).withColumn("__block", GraftTable.segmentOf)
       val p = partial(withBlock, q, rest, extraKeys = Seq("__block"))
       val tmp = table.cacheRoot.resolve(key).resolve(s".tmp-${java.util.UUID.randomUUID()}")
       p.write.partitionBy("__block").mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val written = {
-        val s = Files.list(tmp)
-        try s.iterator().asScala
-          .filter(d => d.getFileName.toString.startsWith("__block=")).toSeq
-        finally s.close()
-      }
-      written.foreach { d =>
+      table.listChildren(tmp).filter(_.getFileName.toString.startsWith("__block=")).foreach { d =>
         val id = d.getFileName.toString.stripPrefix("__block=")
         val dest = table.cacheRoot.resolve(key).resolve(id)
         // a concurrent run may have published the same partial between
@@ -243,19 +225,14 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
               if (!Files.exists(dest)) throw e
           }
       }
-      locally {
-        val s = Files.walk(tmp)
-        try s.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.delete)
-        finally s.close()
-      }
+      table.deleteRecursively(tmp)
     }
 
     // hits and just-written misses: one multi-path read under the
     // partial's analyzed schema. A block whose partial has zero groups
     // writes no dir — read only what exists (it recomputes next run;
     // empty is cheap anyway).
-    val cached = hitPaths ++ missIds.map(id => table.cacheRoot.resolve(key).resolve(id))
+    val cached = hitPaths ++ misses.map(s => table.cacheRoot.resolve(key).resolve(s.id))
       .filter(Files.exists(_))
     val cachedPartials: Option[DataFrame] =
       if (cached.isEmpty) None
@@ -265,8 +242,8 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     // partially-covered blocks and the top-up block: one scan with the
     // FULL filter set
     val uncachedPartials: Option[DataFrame] =
-      if (uncacheableIds.isEmpty) None
-      else Some(partial(blocks(uncacheableIds), q, q.filters))
+      if (uncacheable.isEmpty) None
+      else Some(partial(table.scan(snap, uncacheable), q, q.filters))
 
     // all-blocks-skipped still takes the normal merge path over an EMPTY
     // partial frame, so the zero-row result carries the MERGED output
@@ -280,7 +257,7 @@ class QueryCache(spark: SparkSession, table: GraftTable) {
     val aggs = q.mergeAggs
     val out = q.finish(parts.reduce(_.unionByName(_, allowMissingColumns = false))
       .groupBy(q.groups.map(col): _*).agg(aggs.head, aggs.tail: _*))
-    (out, CacheOutcome(hitPaths.size, missIds.size, uncacheableIds.size, skipped))
+    (out, CacheOutcome(hitPaths.size, misses.size, uncacheable.size, skipped))
   }
 }
 

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -385,17 +386,27 @@ class IngestSpec extends SparkSpec {
         }
       } catch { case e: Throwable => errs.add(e) }
     })
+    // the CLI's read: an uncached query, retried on a stale listing
+    val countQ = SybilQuery().aggregate("id").withOp(graft.dsl.AggOp.SumOp)
     val reader = pool.submit(new Runnable {
       def run(): Unit = try {
         var lastCnt = 0L
         var reads = 0
-        while (!writerDone || reads < 5) {
+        while (!writerDone || reads < 10) {
           val during = digestActive.get()
-          val row = t.withSnapshot(readLog = true) { df =>
-            df.agg(count(lit(1)), coalesce(sum(col("id")), lit(0L)))
-              .collect()(0)
-          }
-          val (cnt, s) = (row.getLong(0), row.getLong(1))
+          val (cnt, s) =
+            if (reads % 2 == 0) {
+              val row = t.withSnapshot(readLog = true) { df =>
+                df.agg(count(lit(1)), coalesce(sum(col("id")), lit(0L)))
+                  .collect()(0)
+              }
+              (row.getLong(0), row.getLong(1))
+            } else {
+              val row = GraftTable.retryStaleListing() {
+                t.query(countQ, readLog = true).collect()
+              }.head
+              (row.getAs[Long]("Count"), row.getAs[Double]("id_sum").toLong)
+            }
           // exactly-once PREFIX: batch-aligned count, and the id sum
           // identifies the prefix uniquely (batches are disjoint ranges)
           assert(cnt % rowsPer === 0L,
@@ -540,17 +551,38 @@ class IngestSpec extends SparkSpec {
     // column the registry has never seen either
     (100 until 150).map(i => (i.toLong, i % 5, s"x$i")).toDF("id", "k", "extra")
       .write.parquet(s"$root/ingest/${java.util.UUID.randomUUID()}")
+    // and a block dir, as a digest that crashed before its sidecar write
+    // leaves it
+    val orphanBlock = java.util.UUID.randomUUID().toString
+    (150 until 180).map(i => (i.toLong, i % 5)).toDF("id", "k").coalesce(1)
+      .write.parquet(s"$root/blocks/$orphanBlock")
     assert(t.info().rowCount === 100) // sidecar stale
-    t.digest() // digest reconciles first
-    assert(t.info().rowCount === 150, "orphan segment must be recovered")
-    assert(t.read().count() === 150)
+    // digest reconciles first: ONE stats scan over both orphans, whose
+    // group-by shuffle makes it two jobs under AQE (the map stage is a
+    // job of its own), then its write (a compact=false digest leaves the
+    // orphan block a segment)
+    val digestJobs = Meter.measure(spark)(t.digest(compact = false))._2
+    assert(digestJobs.phases.toMap.get("graft.digest.reconcile").map(_.jobs) === Some(2L) &&
+      digestJobs.total.jobs === 3, digestJobs.phases.mkString("; "))
+    assert(t.info().rowCount === 180, "orphan segments must be recovered")
+    assert(t.read().count() === 180)
     val id = t.info().columns.find(_.name == "id").get
-    assert(id.max.contains(149L))
+    assert(id.max.contains(179L))
+    val segs = t.info().segments
+    assert(segs.map(s => (s.kind, s.rows)).sorted === Seq(("block", 30L), ("block", 150L)))
+    val scanned = segs.find(_.id == orphanBlock).get.stat("id").get
+    assert(scanned === graft.sources.ColStat("id", Some(150L), Some(179L), 30L,
+      (150 until 180).sum.toDouble, (150 until 180).map(i => i.toDouble * i).sum))
+    // the drained logs' scanned row count cross-checked the digest's
+    // observed one (a mismatch would have cost a third, rescan, job)
+    val digested = segs.find(_.id != orphanBlock).get
+    assert(digested.stat("id").map(s => (s.min, s.max, s.cnt)) ===
+      Some((Some(0L), Some(149L), 150L)))
     // the orphan's column reaches the registry and the digested block,
     // where the older rows read it as null
     assert(t.info().columns.find(_.name == "extra").map(_.dtype) === Some("string"))
     val block = spark.read.parquet(
-      java.nio.file.Paths.get(root, "blocks", t.blockIds.head).toString)
+      java.nio.file.Paths.get(root, "blocks", digested.id).toString)
     assert(block.filter(col("extra").isNull).select("id").as[Long].collect().sorted.toSeq ===
       (0L until 100L))
     assert(block.filter(col("extra") === concat(lit("x"), col("id").cast("string"))).count() === 50)
@@ -583,6 +615,10 @@ class IngestSpec extends SparkSpec {
     assert(jobsOf(t.digest()) === 1)
     assert(t.blockIds.size === 1 && t.info().rowCount === 350)
     assert(t.read().count() === 350)
+    // building a read or a query is driver-side: the schema is the
+    // sidecar registry's, so no job runs until the result is consumed
+    assert(jobsOf { t.query(SybilQuery().groupBy("user")); () } === 0)
+    assert(jobsOf { t.read(); () } === 0)
   }
 
   test("digest puts a column the sidecar registry lost back, from its " +
@@ -614,6 +650,37 @@ class IngestSpec extends SparkSpec {
     assert(o1.misses === 1 && canon(miss) === uncached)
     val (hit, o2) = cache.run(q)
     assert(o2.hits === 1 && canon(hit) === uncached)
+  }
+
+  test("a column whose registry type does not parse back reads under its " +
+      "footer type, cached and uncached") {
+    import spark.implicits._
+    val root = tmpDir("graft-structcol")
+    val t = new GraftTable(spark, root)
+    def batch(r: Range) = t.ingest(r.map(i => (1700000000L + i, s"u${i % 3}", i.toLong))
+      .toDF("time", "user", "v")
+      .select(col("time"), col("user"), struct(col("v").as("a b")).as("s")))
+    // two blocks: the older one cacheable, the newer the top-up block
+    batch(0 until 100)
+    t.digest()
+    batch(100 until 150)
+    t.digest(compact = false)
+    // the registry keeps Spark's simpleString, which does not quote "a b"
+    val dtype = t.info().columns.find(_.name == "s").map(_.dtype)
+    assert(dtype === Some("struct<a b:bigint>"))
+    assert(Try(DataType.fromDDL(dtype.get)).isFailure)
+    val back = t.read().select(col("time"), col("s.`a b`"))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(back === (0 until 150).map(i => (1700000000L + i, i.toLong)))
+    val q = SybilQuery().groupBy("user").intFilterGt("time", 0).limitTo(10)
+    def canon(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val uncached = canon(t.query(q))
+    assert(uncached.size === 3, uncached)
+    val cache = new graft.sources.QueryCache(spark, t)
+    val (miss, o1) = cache.run(q)
+    assert(o1 === graft.sources.CacheOutcome(0, 1, 1, 0) && canon(miss) === uncached)
+    val (hit, o2) = cache.run(q)
+    assert(o2 === graft.sources.CacheOutcome(1, 0, 1, 0) && canon(hit) === uncached)
   }
 
   test("ingest of a batch whose every column conflicts is a warned no-op") {
